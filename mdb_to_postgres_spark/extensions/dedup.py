@@ -133,16 +133,15 @@ def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     component builder, the cluster QA report and the whole graph tier all
     consume it — so it is computed once per (session, sf), exactly like
     the pair table a production dedup run materializes before clustering,
-    and it is computed by the SCALE plan (_split_pairs_from: candidate-free
-    hot/cold split verify — no term quadratic in boilerplate shingle df,
-    no prefix-candidate overhead), which is provably and test-asserted
-    identical to the naive inverted-index self-join this query's DuckDB
-    oracle runs."""
+    and it is computed by the SCALE plan (_pairs_from: candidate-free
+    hot/cold split verify — no term quadratic in boilerplate shingle df),
+    which is provably and test-asserted identical to the naive
+    inverted-index self-join this query's DuckDB oracle runs."""
     from ..sources.tables import session_cache_get
 
     def build() -> DataFrame:
-        return _split_pairs_from(
-            doc_shingles(spark, sf_dir), stats=doc_pair_stats(spark, sf_dir)
+        return _pairs_from(
+            doc_shingles(spark, sf_dir), "jaccard", stats=doc_pair_stats(spark, sf_dir)
         ).localCheckpoint()
 
     return session_cache_get(_JACCARD_PAIR_CACHE, spark, sf_dir, build)
@@ -162,235 +161,166 @@ def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the only quadratic term in the exact pipeline.
 _HOT_DF = 64
 
-
-def _split_pairs_from(
-    sh: DataFrame,
-    hot_df: int = _HOT_DF,
-    stats: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
-    """Candidate-free exact thresholded Jaccard pair list (t = 0.35) —
-    the SHARED substrate engine deployed by x_dedup_near_jaccard and
-    x_dedup_prefix_filter_join via the session pair cache. Same hot/cold
-    split and feasibility bound as the PPJoin demo twin (_ppjoin_from),
-    WITHOUT the prefix-candidate machinery: measured at the 100x replica,
-    the prefix+semi stage kept 52M of 52M cold-sharing pairs at this low
-    threshold (t = 0.35 prefixes cover ~65% of postings — PPJoin prunes
-    well only at high thresholds), so the candidate join was pure
-    overhead on this path. Completeness is direct: every pair sharing
-    >= 1 cold shingle appears in the cold match stream; hot-only pairs
-    ride channel 2 (both docs provably hot-heavy). Exactness and the
-    no-false-positive undercount argument are in _pairs_from's proof
-    docstring; bit-equality with the naive self-join (including hot_df
-    4/0 caps and adversarial synthetic corpora) is asserted in
-    tests/test_dedup_pairs.py for THIS function, not just the twin."""
-    return _pairs_from(sh, hot_df, use_prefix_candidates=False, stats=stats)
-
-
-def _ppjoin_pairs(
-    spark: SparkSession, sf_dir: str, hot_df: int = _HOT_DF
-) -> DataFrame:
-    """Exact thresholded Jaccard pair list (t = 0.35) via the PPJoin
-    bound with a hot/cold split verify — output PROVABLY identical to the
-    naive full-index self-join. Four claims carry the proof (and
-    tests/test_dedup_pairs.py asserts the equality end to end, including
-    a degenerate all-hot cap):
-
-    1. COMPLETENESS (channel 1): any pair with J >= t shares a shingle in
-       both docs' df-ascending prefixes (pigeonhole on the rarest
-       shingles), so the prefix self-join candidates cover every
-       qualifying pair that shares at least one COLD (df <= hot_df)
-       shingle.
-    2. EXACTNESS: cold and hot shingles partition the vocabulary, so
-       cold match count + hot array intersect is the true intersection
-       for every channel-1 survivor.
-    3. FEASIBILITY FILTER: isect <= cold_isect + min(n_hot_a, n_hot_b)
-       and J >= t forces isect >= t/(1+t) * (sz_a + sz_b) (= 7/27 at
-       t = 0.35), so any pair failing 27 * upper >= 7 * (sz_a + sz_b) is
-       provably sub-threshold and drops BEFORE the per-pair array joins —
-       the surviving set is output-sized, not sharing-pairs-sized (26k
-       survivors out of 52M sharing pairs at the 100x replica).
-    4. HOT-ONLY pairs (channel 2): a qualifying pair sharing NO cold
-       shingle has isect <= min(n_hot_a, n_hot_b) and therefore BOTH docs
-       hot-heavy (n_hot >= t/(1+t) * sz). Channel 2 enumerates
-       hot-sharing pairs among hot-heavy docs only (EMPTY on any corpus
-       whose boilerplate is a small fraction of each doc — probed with a
-       one-row count on the checkpointed stats table and skipped
-       entirely), anti-joins the channel-1 survivors, and scores the rest
-       by hot intersect alone: exact for genuinely hot-only pairs, and a
-       provably sub-threshold undercount for anything else (an undercount
-       only lowers jaccard, so no false positive can cross the filter).
-
-    Cost model vs the naive index (numbers from the 100x replica, 500k
-    docs): the match stream drops every hot shingle — the only
-    super-linear term (343 boilerplate trigrams were 55% of the 618M-row
-    stream, growing ~quadratically with corpus size while the cold stream
-    grew linearly); the candidate stream stays semi-join-only (never
-    globally deduplicated — a global dedup measured +17 s); ONE broadcast
-    of the (shingle, df) table feeds the prefix ranking and the cold/hot
-    split off a shared subtree; per-doc stats (set size + the bounded hot
-    array) come from ONE extra pass over the postings, checkpointed thin
-    (one row per doc) so the feasibility broadcast, the survivor array
-    joins and the heavy probe all reuse it. At billion-doc scale the two
-    small broadcasts (vocab df, doc stats) outgrow memory — swap them for
-    shuffle joins; every other shape is already shuffle-based and linear.
-    """
-    return _ppjoin_from(doc_shingles(spark, sf_dir), hot_df)
-
-
-def _ppjoin_from(sh: DataFrame, hot_df: int = _HOT_DF) -> DataFrame:
-    """The PPJoin candidate-bound twin of _split_pairs_from — identical
-    output (equality asserted in tests/test_dedup_pairs.py), different
-    cost model: the prefix self-join prunes candidates well at HIGH
-    thresholds but keeps essentially everything at t = 0.35, so the
-    deployed substrate path is the candidate-free twin. Kept as the
-    didactic/demo form and as the high-threshold engine of choice."""
-    return _pairs_from(sh, hot_df, use_prefix_candidates=True)
+# measure -> (num, den, size): score >= t forces den * isect >= num *
+# size(sz_a, sz_b). Jaccard: J >= t <=> isect >= t/(1+t) * (sz_a + sz_b),
+# 7/27 at t = 0.35. Containment: isect >= 0.8 * min(sz_a, sz_b).
+_BOUNDS = {
+    "jaccard": (7, 27, lambda a, b: a + b),
+    "containment": (8, 10, F.least),
+}
 
 
 def _pairs_from(
     sh: DataFrame,
+    measure: str,
     hot_df: int = _HOT_DF,
-    *,
-    use_prefix_candidates: bool = False,
     stats: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """Shared exact thresholded-Jaccard pair core over any distinct
-    (doc_id, shingle) table: hot/cold split verify + feasibility bound,
-    with the PPJoin prefix-candidate stage optional (see _ppjoin_pairs's
-    proof docstring for the four exactness/completeness claims). One body
-    serves both engines so the proof-carrying code exists exactly once.
-    `stats` (from doc_pair_stats) injects the session-cached
-    (dfreq, doc_stats) substrate shared with the containment engine; when
-    absent (standalone/test use) the same artifacts build per call."""
+    """Exact thresholded pair list over any distinct (doc_id, shingle)
+    table — the one set-similarity pair engine. `measure` is "jaccard"
+    (|A∩B| / |A∪B| >= 0.35 -> doc_a, doc_b, jaccard; behind
+    x_dedup_near_jaccard's session pair list and everything built on it)
+    or "containment" (|A∩B| / min(|A|,|B|) >= 0.8 -> doc_a, doc_b,
+    containment, jaccard; behind x_dedup_containment). `stats` (from
+    doc_pair_stats) injects the session-cached (dfreq, doc_stats)
+    substrate shared by both measures; when absent (standalone/test use)
+    the same artifacts build per call.
+
+    The output is PROVABLY identical to the naive full-index self-join
+    (_naive_pairs_from / _naive_containment_from; tests/test_dedup_pairs.py
+    asserts it for both measures at hot caps 64/4/0 and on adversarial
+    synthetic corpora). With (num, den, size) from _BOUNDS, four claims
+    carry the proof:
+
+    1. COMPLETENESS (channel 1): every pair sharing >= 1 COLD
+       (df <= hot_df) shingle appears in the cold match stream directly.
+    2. EXACTNESS: cold and hot shingles partition the vocabulary, so cold
+       match count + hot array intersect is the true intersection for
+       every channel-1 pair.
+    3. FEASIBILITY FILTER: isect <= upper = cold_isect + min(n_hot_a,
+       n_hot_b), so any pair failing den * upper >= num * size(sz_a, sz_b)
+       is provably sub-threshold and drops BEFORE the per-pair array joins
+       — the checkpointed survivor set is output-sized, not
+       sharing-pairs-sized (26k Jaccard survivors out of 52M sharing pairs
+       at the 100x replica).
+    4. HOT-ONLY pairs (channel 2): a qualifying pair sharing NO cold
+       shingle has isect <= min(n_hot_a, n_hot_b), and size(sz_a, sz_b)
+       >= sz_s for the smaller doc s under both measures, so
+       den * n_hot_s >= num * sz_s — the smaller doc is hot-heavy (under
+       Jaccard both are). Channel 2 joins every hot-heavy doc's hot
+       shingles against ALL hot postings (bounded by |heavy| * max hot df,
+       not df^2), so every such pair appears; it anti-joins the channel-1
+       survivors and scores the rest by hot intersect alone: exact for
+       genuinely hot-only pairs, and a provably sub-threshold undercount
+       for anything else (an undercount only lowers both scores, so no
+       false positive can cross the filter). Channel 2 is EMPTY on any
+       corpus whose boilerplate is a small fraction of each doc — probed
+       with a one-row count on the checkpointed stats table and skipped.
+
+    Cost model vs the naive index (100x replica, 500k docs): the match
+    stream drops every hot shingle — the only super-linear term. There is
+    no prefix-candidate stage: at t = 0.35 a PPJoin prefix self-join kept
+    52M of 52M cold-sharing pairs, and at t = 0.8 a positional prefix
+    stage made containment slower, not faster (interleaved A/B, 4 cores:
+    median 160 s with it vs 108 s without at the 100x replica, 2.5 s vs
+    1.5 s at sf0.1). ONE broadcast of the (shingle, df) table feeds the
+    cold/hot split; per-doc stats (set size + the bounded hot array) come
+    from ONE extra pass over the postings, checkpointed thin (one row per
+    doc) so the feasibility broadcast, the survivor array joins and the
+    heavy probe all reuse it. At billion-doc scale the two small
+    broadcasts (vocab df, doc stats) outgrow memory — swap them for
+    shuffle joins; every other shape is already shuffle-based and linear.
+    """
+    num, den, size = _BOUNDS[measure]
     if stats is None:
         stats = _build_pair_stats(sh, hot_df)
     dfreq, doc_stats = stats
     post = sh.join(F.broadcast(dfreq), "shingle")
-    if use_prefix_candidates:
-        ranked = post.withColumn(
-            "rn",
-            F.row_number().over(Window.partitionBy("doc_id").orderBy("df", "shingle")),
-        ).withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
-        prefix = ranked.filter(
-            F.col("rn") <= F.col("sz") - F.expr("(35 * sz + 99) div 100") + 1
-        ).select("doc_id", "shingle", "sz")
-        # Candidate pairs: prefix-shingle self-join + AllPairs length
-        # filter (J(a,b) >= t forces t*|a| <= |b| and symmetrically).
-        cand = (
-            prefix.alias("a")
-            .join(prefix.alias("b"), "shingle")
-            .filter(
-                (F.col("a.doc_id") < F.col("b.doc_id"))
-                & (100 * F.col("b.sz") >= 35 * F.col("a.sz"))
-                & (100 * F.col("a.sz") >= 35 * F.col("b.sz"))
+    # Per-side views of the thin doc stats: (size, hot count) broadcast
+    # for the bound, the hot arrays for the exact rescore.
+    meta_a, meta_b = (
+        F.broadcast(
+            doc_stats.select(
+                F.col("doc_id").alias(f"doc_{s}"),
+                F.col("sz").alias(f"sz_{s}"),
+                F.size("hot_sh").alias(f"n_hot_{s}"),
             )
-            .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         )
-    smeta = doc_stats.select("doc_id", "sz", F.size("hot_sh").alias("n_hot"))
+        for s in "ab"
+    )
+    hot_a, hot_b = (
+        doc_stats.select(F.col("doc_id").alias(f"doc_{s}"), F.col("hot_sh").alias(f"hot_{s}"))
+        for s in "ab"
+    )
+
+    def rescored(pairs: DataFrame) -> DataFrame:
+        # hot_sh is never NULL (see doc_stats), so size(array_intersect) is
+        # always >= 0 here — no sizeOfNull=-1 hazard on this inner join.
+        return pairs.join(hot_a, "doc_a").join(hot_b, "doc_b").select(
+            "doc_a",
+            "doc_b",
+            (F.col("cold_isect") + F.size(F.array_intersect("hot_a", "hot_b"))).alias("isect"),
+            "sz_a",
+            "sz_b",
+        )
+
     # Channel 1: pairs sharing at least one cold shingle. The match
     # stream runs over cold postings only — each cold shingle emits at
     # most hot_df^2 pairs, so the stream is LINEAR in postings.
     cold = post.filter(F.col("df") <= hot_df)
     ca = cold.select(F.col("doc_id").alias("doc_a"), "shingle")
     cb = cold.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cold_pairs = ca.join(cb, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
-    if use_prefix_candidates:
-        cold_pairs = cold_pairs.join(cand, ["doc_a", "doc_b"], "left_semi")
-    cold_pairs = cold_pairs.groupBy("doc_a", "doc_b").agg(
-        F.count("*").alias("cold_isect")
-    )
     upper = F.col("cold_isect") + F.least("n_hot_a", "n_hot_b")
     survivors = (
-        cold_pairs.join(
-            F.broadcast(
-                smeta.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("sz").alias("sz_a"),
-                    F.col("n_hot").alias("n_hot_a"),
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                smeta.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("sz").alias("sz_b"),
-                    F.col("n_hot").alias("n_hot_b"),
-                )
-            ),
-            "doc_b",
-        )
-        .filter(27 * upper >= 7 * (F.col("sz_a") + F.col("sz_b")))
+        ca.join(cb, "shingle")
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("cold_isect"))
+        .join(meta_a, "doc_a")
+        .join(meta_b, "doc_b")
+        .filter(den * upper >= num * size(F.col("sz_a"), F.col("sz_b")))
         .localCheckpoint()
     )
-    hot_a = doc_stats.select(F.col("doc_id").alias("doc_a"), F.col("hot_sh").alias("hot_a"))
-    hot_b = doc_stats.select(F.col("doc_id").alias("doc_b"), F.col("hot_sh").alias("hot_b"))
-    # hot_sh is never NULL (see doc_stats), so size(array_intersect) is
-    # always >= 0 here — no sizeOfNull=-1 hazard on this inner join.
-    ch1 = (
-        survivors.join(hot_a, "doc_a")
-        .join(hot_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("cold_isect") + F.size(F.array_intersect("hot_a", "hot_b"))).alias(
-                "isect"
-            ),
-            "sz_a",
-            "sz_b",
-        )
-    )
-    # Channel 2: hot-only pairs, possible only between hot-heavy docs
-    # (27 * n_hot >= 7 * sz — docstring claim 4). One cheap count on the
-    # checkpointed stats table; empty on every normal corpus.
-    heavy = doc_stats.filter(27 * F.size("hot_sh") >= 7 * F.col("sz")).select(
-        "doc_id", "hot_sh"
-    )
-    both = ch1
+    both = rescored(survivors)
+    # Channel 2: hot-only pairs, possible only with a hot-heavy doc
+    # (claim 4). One cheap count on the checkpointed stats table; empty on
+    # every normal corpus.
+    heavy = doc_stats.filter(den * F.size("hot_sh") >= num * F.col("sz"))
     if heavy.limit(1).count() > 0:
-        hx = heavy.select("doc_id", F.explode("hot_sh").alias("shingle"))
+        hvx = heavy.select(F.col("doc_id").alias("doc_s"), F.explode("hot_sh").alias("shingle"))
+        hot_post = post.filter(F.col("df") > hot_df).select(
+            F.col("doc_id").alias("doc_o"), "shingle"
+        )
         ch2 = (
-            hx.select(F.col("doc_id").alias("doc_a"), "shingle")
-            .join(hx.select(F.col("doc_id").alias("doc_b"), "shingle"), "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .select("doc_a", "doc_b")
+            hvx.join(hot_post, "shingle")
+            .filter(F.col("doc_s") != F.col("doc_o"))
+            .select(
+                F.least("doc_s", "doc_o").alias("doc_a"),
+                F.greatest("doc_s", "doc_o").alias("doc_b"),
+            )
             .distinct()
             .join(survivors.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-            .join(heavy.select(F.col("doc_id").alias("doc_a"), F.col("hot_sh").alias("hot_a")), "doc_a")
-            .join(heavy.select(F.col("doc_id").alias("doc_b"), F.col("hot_sh").alias("hot_b")), "doc_b")
-            .join(
-                F.broadcast(smeta.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))),
-                "doc_a",
-            )
-            .join(
-                F.broadcast(smeta.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))),
-                "doc_b",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("hot_a", "hot_b")).cast("long").alias("isect"),
-                "sz_a",
-                "sz_b",
-            )
+            .join(meta_a, "doc_a")
+            .join(meta_b, "doc_b")
+            .withColumn("cold_isect", F.lit(0).cast("long"))
         )
-        both = ch1.unionByName(ch2)
-    jac = both.withColumn(
-        "jaccard",
-        F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect")),
-    ).filter(F.col("jaccard") >= 0.35)
-    return jac.select("doc_a", "doc_b", "jaccard")
+        both = both.unionByName(rescored(ch2))
+    jaccard = F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect"))
+    if measure == "jaccard":
+        out = both.withColumn("jaccard", jaccard).filter(F.col("jaccard") >= 0.35)
+        return out.select("doc_a", "doc_b", "jaccard")
+    out = (
+        both.withColumn("containment", F.col("isect").cast("double") / F.least("sz_a", "sz_b"))
+        .withColumn("jaccard", jaccard)
+        .filter(F.col("containment") >= 0.8)
+    )
+    return out.select("doc_a", "doc_b", "containment", "jaccard")
 
 
-def _near_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The naive full-inverted-index form: every sharing pair enumerated,
-    grouped, thresholded. Quadratic in hot-shingle df — kept as the
-    equivalence oracle for _ppjoin_pairs (and mirrored by every DuckDB
-    oracle over the pair list), NOT on the shared substrate path."""
-    return _naive_pairs_from(doc_shingles(spark, sf_dir))
-
-
+# Naive full-inverted-index Jaccard: every sharing pair enumerated,
+# grouped, thresholded — the equivalence oracle for _pairs_from(sh,
+# "jaccard") and the shape of every DuckDB oracle over the pair list.
+# Quadratic in hot-shingle df, so off the query path.
 def _naive_pairs_from(sh: DataFrame) -> DataFrame:
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
@@ -870,10 +800,10 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Shared pair-engine statistics over the corpus shingle index: the
 # (shingle, df) vocabulary table and the thin per-doc stats row (set size +
-# bounded hot-shingle array) are IDENTICAL inputs to the thresholded-Jaccard
-# engine (_pairs_from — feeds the session pair list behind
-# x_dedup_near_jaccard / x_dedup_prefix_filter_join / the graph tier) and
-# the containment engine (_containment_from). Two consumers of one
+# bounded hot-shingle array) are IDENTICAL inputs to both measures of the
+# pair engine (_pairs_from): Jaccard — the session pair list behind
+# x_dedup_near_jaccard / x_dedup_prefix_filter_join / the graph tier — and
+# containment (x_dedup_containment). Two consumers of one
 # artifact = the house rule for a session-cached substrate: build both
 # tables once per (applicationId, sf_dir) — at 100 TB these are the
 # vocabulary/doc-stats sidecars a dedup pipeline persists beside the
@@ -909,7 +839,7 @@ def _build_pair_stats(sh: DataFrame, hot_df: int) -> tuple[DataFrame, DataFrame]
 def doc_pair_stats(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """Session-cached (dfreq, doc_stats) over doc_shingles at the deployed
     hot cap (_HOT_DF) — the substrate shared by the Jaccard and
-    containment pair engines."""
+    containment measures of _pairs_from."""
     from ..sources.tables import session_cache_get
 
     return session_cache_get(
@@ -1212,23 +1142,24 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     which symmetric Jaccard structurally misses: a 100-shingle doc inside
     a 1000-shingle doc has containment 1.0 but Jaccard 0.1. Both metrics
     are emitted so the gap is visible per pair. Runs on the candidate-free
-    hot/cold split engine (_containment_from, the containment twin of
-    _split_pairs_from) with the containment feasibility bound
-    isect >= 0.8 * min(sz): the boilerplate-shingle df^2 term never
-    enters the match stream (see _ppjoin_pairs for the measured 100x
-    numbers). Bit-equality with the naive self-join is asserted in
-    tests/test_dedup_pairs.py plus the DuckDB oracle at the driver
-    gate. The (dfreq, doc_stats) build rides the session substrate shared
-    with the Jaccard engine (doc_pair_stats) — the per-call work is the
-    cold match stream + survivor rescore only."""
-    return _containment_from(
-        doc_shingles(spark, sf_dir), stats=doc_pair_stats(spark, sf_dir)
+    hot/cold split pair engine (_pairs_from, measure "containment") with
+    the containment feasibility bound isect >= 0.8 * min(sz): the
+    boilerplate-shingle df^2 term never enters the match stream (see
+    _pairs_from for the proof and the measured 100x numbers). Bit-equality
+    with the naive self-join is asserted in tests/test_dedup_pairs.py plus
+    the DuckDB oracle check. The (dfreq, doc_stats) build
+    rides the session substrate shared with the Jaccard measure
+    (doc_pair_stats) — the per-call work is the cold match stream +
+    survivor rescore only."""
+    return _pairs_from(
+        doc_shingles(spark, sf_dir), "containment", stats=doc_pair_stats(spark, sf_dir)
     )
 
 
 def _naive_containment_from(sh: DataFrame) -> DataFrame:
     """Naive full-inverted-index containment: the equivalence oracle for
-    _containment_from (quadratic in hot-shingle df — off the query path)."""
+    _pairs_from(sh, "containment") (quadratic in hot-shingle df — off the
+    query path)."""
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -1244,212 +1175,6 @@ def _naive_containment_from(sh: DataFrame) -> DataFrame:
         .withColumn(
             "containment",
             F.col("isect").cast("double") / F.least("sz_a", "sz_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect")),
-        )
-        .filter(F.col("containment") >= 0.8)
-    )
-    return out.select("doc_a", "doc_b", "containment", "jaccard")
-
-
-def _containment_from(
-    sh: DataFrame,
-    hot_df: int = _HOT_DF,
-    stats: tuple[DataFrame, DataFrame] | None = None,
-    *,
-    use_prefix_candidates: bool = True,
-) -> DataFrame:
-    """Containment (t = 0.8) twin of _split_pairs_from (hot/cold split),
-    with a PPJoin-style positional prefix filter bounding the cold match
-    stream (round-13; guide §2.2/§3 — prune BEFORE the pair shuffle).
-    Consumes the SAME (dfreq, doc_stats) substrate as the Jaccard engine —
-    pass `stats` from doc_pair_stats for the session-cached build (the
-    registered query does; round-9 verdict item 1). The proof obligations
-    shift with the asymmetric measure:
-
-    1. COMPLETENESS: every pair sharing >= 1 cold shingle appears in the
-       cold match stream directly; a pair sharing ONLY hot shingles with
-       C >= 0.8 has isect <= min(n_hot) and isect >= 0.8 * sz_s for the
-       smaller doc s, hence n_hot_s >= 0.8 * sz_s — the smaller doc must
-       be hot-heavy, and channel 2 enumerates exactly those.
-    2. EXACTNESS + FEASIBILITY: identical hot/cold vocabulary split;
-       upper = cold_isect + min(n_hot) and C >= 0.8 requires
-       10 * upper >= 8 * min(sz) — provably sub-threshold pairs drop
-       before the per-pair array joins.
-    3. HOT-ONLY pairs: channel 2 joins the hot-heavy docs' hot shingles
-       against the hot posting lists (bounded by |heavy| * max hot df,
-       not df^2), anti-joins the survivors, and scores by hot intersect
-       alone (undercount-monotone: no false positive can cross 0.8).
-    4. PREFIX FILTER (candidate semi-join on channel 1): rank every doc's
-       shingles by the global (df ASC, shingle ASC) total order. If
-       C(a,b) >= 0.8 with s = the smaller doc, at most
-       sz_s - ceil(0.8*sz_s) of s's shingles are unshared, so among s's
-       first p_s = sz_s - ceil(0.8*sz_s) + 1 shingles at least one is
-       shared (pigeonhole) — and therefore the SMALLEST shared shingle
-       w is inside s's prefix. Cold df <= hot_df < hot df, so cold
-       shingles precede every hot one in the order; hence for any pair
-       sharing >= 1 cold shingle, w is COLD, and the candidate join needs
-       only cold prefix entries vs cold postings. For w (the first
-       common shingle in both orders), everything before it on either
-       side is unshared, so isect <= 1 + min(sz_s - rn_s, sz_o - rn_o)
-       — the positional filter; C >= 0.8 then requires
-       10 * (1 + min(remaining)) >= 8 * sz_s, pruning deep-position
-       matches. Pairs pruned here are provably sub-threshold; if they
-       also share hot shingles they may re-surface via channel 2, where
-       the hot-only score is an undercount (<= true C < 0.8) — still no
-       false positive, and no duplicate (channel 2 anti-joins channel-1
-       survivors). Measured at the 100x replica: the cold match stream
-       drops ~112M -> ~output-sized pairs before its groupBy exchange."""
-    if stats is None:
-        stats = _build_pair_stats(sh, hot_df)
-    dfreq, doc_stats = stats
-    post = sh.join(F.broadcast(dfreq), "shingle")
-    smeta = doc_stats.select("doc_id", "sz", F.size("hot_sh").alias("n_hot"))
-    cold = post.filter(F.col("df") <= hot_df)
-    ca = cold.select(F.col("doc_id").alias("doc_a"), "shingle")
-    cb = cold.select(F.col("doc_id").alias("doc_b"), "shingle")
-    cold_pairs = ca.join(cb, "shingle").filter(F.col("doc_a") < F.col("doc_b"))
-    if use_prefix_candidates:
-        ranked = (
-            post.withColumn(
-                "rn",
-                F.row_number().over(
-                    Window.partitionBy("doc_id").orderBy("df", "shingle")
-                ),
-            )
-            .withColumn("sz", F.count("*").over(Window.partitionBy("doc_id")))
-            .filter(F.col("df") <= hot_df)  # claim 4: w is cold
-            .select("doc_id", "shingle", "rn", "sz")
-        )
-        # prefix length p = sz - ceil(0.8*sz) + 1; integer ceil = (8sz+9) div 10
-        prefix = ranked.filter(
-            F.col("rn") <= F.col("sz") - F.expr("(8 * sz + 9) div 10") + 1
-        )
-        p, f = prefix.alias("p"), ranked.alias("f")
-        cand = (
-            p.join(f, "shingle")
-            .filter(
-                (F.col("p.sz") < F.col("f.sz"))
-                | ((F.col("p.sz") == F.col("f.sz")) & (F.col("p.doc_id") != F.col("f.doc_id")))
-            )
-            .filter(
-                10
-                * (
-                    1
-                    + F.least(
-                        F.col("p.sz") - F.col("p.rn"), F.col("f.sz") - F.col("f.rn")
-                    )
-                )
-                >= 8 * F.col("p.sz")
-            )
-            .select(
-                F.least("p.doc_id", "f.doc_id").alias("doc_a"),
-                F.greatest("p.doc_id", "f.doc_id").alias("doc_b"),
-            )
-        )
-        # Broadcast build: an SMJ semi would shuffle the full pair stream
-        # (exactly the exchange being removed); the candidate set is
-        # output-scale at t=0.8 (prefix+positional filters), so it rides
-        # a broadcast and the match stream is pruned MAP-SIDE before the
-        # groupBy exchange. At corpus scales where candidates outgrow a
-        # broadcast, drop the hint: the semi degrades to one keyed
-        # shuffle of the stream — the cost the groupBy paid anyway.
-        cold_pairs = cold_pairs.join(
-            F.broadcast(cand), ["doc_a", "doc_b"], "left_semi"
-        )
-    cold_pairs = cold_pairs.groupBy("doc_a", "doc_b").agg(
-        F.count("*").alias("cold_isect")
-    )
-    upper = F.col("cold_isect") + F.least("n_hot_a", "n_hot_b")
-    survivors = (
-        cold_pairs.join(
-            F.broadcast(
-                smeta.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("sz").alias("sz_a"),
-                    F.col("n_hot").alias("n_hot_a"),
-                )
-            ),
-            "doc_a",
-        )
-        .join(
-            F.broadcast(
-                smeta.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("sz").alias("sz_b"),
-                    F.col("n_hot").alias("n_hot_b"),
-                )
-            ),
-            "doc_b",
-        )
-        .filter(10 * upper >= 8 * F.least("sz_a", "sz_b"))
-        .localCheckpoint()
-    )
-    hot_a = doc_stats.select(F.col("doc_id").alias("doc_a"), F.col("hot_sh").alias("hot_a"))
-    hot_b = doc_stats.select(F.col("doc_id").alias("doc_b"), F.col("hot_sh").alias("hot_b"))
-    ch1 = (
-        survivors.join(hot_a, "doc_a")
-        .join(hot_b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("cold_isect") + F.size(F.array_intersect("hot_a", "hot_b"))).alias(
-                "isect"
-            ),
-            "sz_a",
-            "sz_b",
-        )
-    )
-    heavy = doc_stats.filter(10 * F.size("hot_sh") >= 8 * F.col("sz")).select(
-        "doc_id", "hot_sh"
-    )
-    both = ch1
-    if heavy.limit(1).count() > 0:
-        hvx = heavy.select(
-            F.col("doc_id").alias("doc_s"), F.explode("hot_sh").alias("shingle")
-        )
-        hot_post = post.filter(F.col("df") > hot_df).select(
-            F.col("doc_id").alias("doc_o"), "shingle"
-        )
-        ch2 = (
-            hvx.join(hot_post, "shingle")
-            .filter(F.col("doc_s") != F.col("doc_o"))
-            .select(
-                F.least("doc_s", "doc_o").alias("doc_a"),
-                F.greatest("doc_s", "doc_o").alias("doc_b"),
-            )
-            .distinct()
-            .join(survivors.select("doc_a", "doc_b"), ["doc_a", "doc_b"], "left_anti")
-            .join(
-                doc_stats.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("hot_sh").alias("hot_a"),
-                    F.col("sz").alias("sz_a"),
-                ),
-                "doc_a",
-            )
-            .join(
-                doc_stats.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("hot_sh").alias("hot_b"),
-                    F.col("sz").alias("sz_b"),
-                ),
-                "doc_b",
-            )
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("hot_a", "hot_b")).cast("long").alias("isect"),
-                "sz_a",
-                "sz_b",
-            )
-        )
-        both = ch1.unionByName(ch2)
-    out = (
-        both.withColumn(
-            "containment", F.col("isect").cast("double") / F.least("sz_a", "sz_b")
         )
         .withColumn(
             "jaccard",
@@ -1603,16 +1328,14 @@ def x_dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle formulation: blocking keys must be selective, whatever the
     algorithm).
 
-    COST-MODEL NOTE (round 9): the registered row now returns the shared
-    session-cached pair list (x_dedup_near_jaccard's candidate-free
-    _split_pairs_from engine) — at t = 0.35 the prefix bound keeps 52M of
-    52M cold-sharing pairs (measured, 100x replica), so the candidate
-    join is pure overhead at this threshold and the default plan for a
-    production-named operator must be the 100 TB-safe one. The PPJoin
-    candidate plan documented above remains available as _ppjoin_pairs /
-    _ppjoin_from (the high-threshold engine of choice) and its
-    bit-equality with the deployed engine and the naive self-join is
-    asserted in tests/test_dedup_pairs.py."""
+    COST-MODEL NOTE: the registered row returns the shared session-cached
+    pair list (x_dedup_near_jaccard's candidate-free _pairs_from engine)
+    — at t = 0.35 the prefix bound keeps 52M of 52M cold-sharing pairs
+    (measured, 100x replica), so the candidate join is pure overhead at
+    this threshold and the default plan for a production-named operator
+    must be the 100 TB-safe one. The PPJoin candidate plan survives only
+    as this query's DuckDB oracle above; the engine's bit-equality with
+    the naive self-join is asserted in tests/test_dedup_pairs.py."""
     return x_dedup_near_jaccard(spark, sf_dir)
 
 

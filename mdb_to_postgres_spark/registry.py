@@ -227,92 +227,19 @@ def load_all() -> None:
 
     def _order_key(name: str, fn: QueryFn) -> tuple:
         rank = _check_rank(name, name in ORACLES, _fingerprint(fn, ORACLES.get(name)))
-        # Debt tiers only arbitrate WITHIN the never-checked pool (rank 1)
-        # — applied at every rank they pinned the tier-A/B greens to the
-        # window's front forever, so the oldest stamps never refreshed.
-        tier = _debt_tier(name) if rank == 1 else 0
         # Within the unchanged greens (rank 4), oldest driver stamp first:
         # the window's spare slots refresh the stalest evidence instead of
         # re-stamping last round's set. _LATEST_ROUND basenames sort by
         # round; absent entries (shouldn't happen post-convergence) lead.
         age = _LATEST_ROUND.get(name, "") if rank == 4 else ""
-        return (rank, tier, age)
+        return (rank, age)
 
     _correctness_history()  # populate _LATEST_ROUND before ordering
     ordered = sorted(QUERIES.items(), key=lambda kv: _order_key(*kv))
-    # sorted() is stable: registration order survives within (rank, tier, age)
+    # sorted() is stable: registration order survives within (rank, age)
     QUERIES.clear()
     QUERIES.update(ordered)
     _LOADED = True
-
-
-# With more never-checked queries than the driver's 50-entry window holds,
-# WHICH unchecked queries wait matters: a query unchecked since round 2/3
-# has priority over one registered this round (the round-3 judge's #1 item
-# is exactly the old cohort). Tiers are a tiebreak WITHIN rank 1 only —
-# the moment a query gets any driver row, _check_rank stops consulting
-# them — so the lists self-expire; they never need pruning, only appending
-# when a future round again oversubscribes the window.
-_DEBT_TIER_A = {  # never checked, registered rounds 1-3 (oldest debt)
-    "x_udf_scalar_pandas", "x_udf_grouped_agg", "x_udf_grouped_map",
-    "x_udtf_expand", "x_udf_map_in_pandas",
-    "x_multimodal_ingest", "x_multimodal_binaryfile", "x_multimodal_decode_stub",
-    "x_multimodal_frame_sample", "x_multimodal_resize_stub",
-    "x_sim_cosine_pairs", "x_sim_topk_knn", "x_sim_ann_lsh", "x_sim_ann_ivf",
-    "x_sim_ann_ivf_kmeans", "x_sim_ann_lsh_hyperplane", "x_dedup_embedding_cos",
-    "reshape_unpivot", "join_nullsafe", "win_gaps_islands", "win_distinct_count",
-    "win_funnel", "win_gap_fill_resample",
-}
-_DEBT_TIER_B = {  # never checked, registered in round 4's first session
-    "sql_q2_min_cost_supplier", "sql_q4_order_priority", "sql_q7_volume_shipping",
-    "sql_q8_market_share", "sql_q9_product_margin", "sql_q12_priority_lines",
-    "sql_q13_customer_distribution", "sql_q15_top_supplier",
-    "sql_q17_small_quantity_revenue", "sql_q20_part_suppliers",
-    "sql_q21_waiting_supplier", "sql_q22_sales_opportunity", "sql_q11_important_value",
-    "agg_corr_exact", "win_percent_of_total", "x_text_quality_gate",
-    "x_pack_curriculum", "x_sim_maxsim_multivector", "x_graph_pagerank",
-    "x_graph_triangles", "stream_cdc_upsert", "x_text_token_entropy",
-    "x_mix_rebalance_tokens", "x_dedup_minhash_lsh_xxh", "x_dedup_simhash_xxh",
-}
-
-
-# Round-6 additions: tier 3, BEHIND every older never-checked query (the
-# §2.13-2.14 backlog defaults to tier 2) — a new query must never displace
-# the round-4 debt from the 50-entry window, whatever module it lives in.
-_DEBT_TIER_C = {
-    "win_funnel_attribution_paths", "win_rfm_segmentation",
-    "stream_late_data_quarantine", "agg_theta_sketch_setops",
-    "x_sample_reservoir_stratified", "join_interval_overlap",
-    "join_bucketed_dedup_verify", "x_dedup_cluster_quality_report",
-    "x_udf_map_in_arrow", "x_graph_bfs_hops",
-    "etl_compact_small_files", "x_privacy_l_diversity",
-    "x_eval_calibration_bins", "x_text_char_lm_score",
-    "x_pipeline_dataset_card", "stream_join_windowed_runtime",
-    "etl_export_jsonl", "x_graph_link_prediction", "agg_hll_sketch_merge",
-}
-
-
-# Round-6 late additions (second session): tier 4, behind the §2.15 rows —
-# the same pacing contract one level deeper: nothing registered this late
-# may displace ANY older never-checked query from the driver window.
-_DEBT_TIER_D = {
-    "x_eval_bootstrap_ci", "x_dedup_chunk_cdc", "x_embedding_pca_covariance",
-    "join_bitemporal", "win_kaplan_meier", "x_graph_label_propagation",
-    "scan_xml", "etl_row_lineage", "etl_merkle_sync_diff",
-    "stream_outer_join_watermark", "x_privacy_t_closeness",
-}
-
-
-def _debt_tier(name: str) -> int:
-    if name in _DEBT_TIER_A:
-        return 0
-    if name in _DEBT_TIER_B:
-        return 1
-    if name in _DEBT_TIER_C:
-        return 3
-    if name in _DEBT_TIER_D:
-        return 4
-    return 2
 
 
 def all_queries() -> dict[str, QueryFn]:

@@ -1,14 +1,14 @@
-"""The exact pair substrate must equal the naive full-inverted-index
-self-join bit-for-bit — for BOTH engines: _split_pairs_from (the
-candidate-free hot/cold split DEPLOYED by x_dedup_near_jaccard and
-x_dedup_prefix_filter_join via the session pair cache) and _ppjoin_from
-(the PPJoin prefix-candidate twin). The hot/cold split verify partitions
-the vocabulary, so cold match count + hot array intersect is the exact
-intersection; the PPJoin prefix bound makes its candidates complete.
-Every downstream consumer (components, canonical, cluster QA, the whole
-graph tier, contrastive triplets) rides this equality, so both engines
-are swept at the default cap, a low cap that forces a real hot arm, and
-the all-hot degenerate cap — plus adversarial synthetic corpora."""
+"""The exact pair engine (_pairs_from) must equal the naive
+full-inverted-index self-join bit-for-bit under BOTH measures: Jaccard
+(the session pair list DEPLOYED by x_dedup_near_jaccard and
+x_dedup_prefix_filter_join) and containment (x_dedup_containment). The
+hot/cold split verify partitions the vocabulary, so cold match count +
+hot array intersect is the exact intersection; the feasibility bound only
+drops provably sub-threshold pairs. Every downstream consumer
+(components, canonical, cluster QA, the whole graph tier, contrastive
+triplets) rides this equality, so each measure is swept at the default
+cap, a low cap that forces a real hot arm, and the all-hot degenerate
+cap — plus adversarial synthetic corpora."""
 
 from __future__ import annotations
 
@@ -16,33 +16,40 @@ import pytest
 from pyspark.sql import functions as F
 
 from mdb_to_postgres_spark.extensions.dedup import (
-    _near_jaccard_pairs,
-    _ppjoin_from,
-    _ppjoin_pairs,
-    _split_pairs_from,
+    _naive_containment_from,
+    _naive_pairs_from,
+    _pairs_from,
     doc_shingles,
 )
 from tests.conftest import ORACLE_SF
 
-ENGINES = [("split", _split_pairs_from), ("ppjoin", _ppjoin_from)]
+NAIVE = {"jaccard": _naive_pairs_from, "containment": _naive_containment_from}
+MEASURES = list(NAIVE)
 
 
 def _pairs_key(pdf):
+    """(doc_a, doc_b, *scores) rows in pair order, scores rounded to 12
+    places; the column names lead so a schema drift fails too."""
     pdf = pdf.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-    return list(zip(pdf.doc_a, pdf.doc_b, pdf.jaccard.round(12)))
+    scores = [pdf[c].round(12) for c in pdf.columns[2:]]
+    return [tuple(pdf.columns)] + list(zip(pdf.doc_a, pdf.doc_b, *scores))
 
 
-@pytest.mark.parametrize("label,engine", ENGINES, ids=[e[0] for e in ENGINES])
-def test_engine_equals_naive_inverted_index(spark, label, engine):
-    sh = doc_shingles(spark, ORACLE_SF)
-    fast = _pairs_key(engine(sh).toPandas())
-    naive = _pairs_key(_near_jaccard_pairs(spark, ORACLE_SF).toPandas())
-    assert len(fast) == len(naive) > 0, label
-    assert fast == naive, label
+def _assert_equals_naive(sh, measure, hot_df, nonempty=True):
+    fast = _pairs_key(_pairs_from(sh, measure, hot_df=hot_df).toPandas())
+    naive = _pairs_key(NAIVE[measure](sh).toPandas())
+    assert fast == naive, (measure, hot_df)
+    if nonempty:
+        assert len(fast) > 1, (measure, hot_df)
 
 
-@pytest.mark.parametrize("label,engine", ENGINES, ids=[e[0] for e in ENGINES])
-def test_engine_hot_arm_exact_at_low_cap(spark, label, engine):
+@pytest.mark.parametrize("measure", MEASURES)
+def test_engine_equals_naive_inverted_index(spark, measure):
+    _assert_equals_naive(doc_shingles(spark, ORACLE_SF), measure, hot_df=64)
+
+
+@pytest.mark.parametrize("measure", MEASURES)
+def test_engine_hot_arm_exact_at_low_cap(spark, measure):
     # The default _HOT_DF=64 puts this SF's whole vocabulary in the cold
     # arm, so the equality above would be vacuous for the hot path. Force
     # a cap low enough that a real slice of the vocabulary rides the
@@ -57,30 +64,16 @@ def test_engine_hot_arm_exact_at_low_cap(spark, label, engine):
         .count()
     )
     assert n_hot > 0, f"corpus has no shingle above df={hot_df}; pick lower"
-    fast = _pairs_key(engine(sh, hot_df=hot_df).toPandas())
-    naive = _pairs_key(_near_jaccard_pairs(spark, ORACLE_SF).toPandas())
-    assert fast == naive, label
+    _assert_equals_naive(sh, measure, hot_df)
 
 
-@pytest.mark.parametrize("label,engine", ENGINES, ids=[e[0] for e in ENGINES])
-def test_engine_all_hot_degenerate_cap(spark, label, engine):
+@pytest.mark.parametrize("measure", MEASURES)
+def test_engine_all_hot_degenerate_cap(spark, measure):
     # hot_df=0 pushes EVERY shingle into the array arm: intersections come
     # only from array_intersect and the cold stream is empty — the
     # all-null/empty-side edge cases (no cold row for a candidate pair)
-    # must not drop or distort pairs.
-    sh = doc_shingles(spark, ORACLE_SF)
-    fast = _pairs_key(engine(sh, hot_df=0).toPandas())
-    naive = _pairs_key(_near_jaccard_pairs(spark, ORACLE_SF).toPandas())
-    assert fast == naive, label
-
-
-def test_ppjoin_pairs_entrypoint_matches_deployed_engine(spark):
-    # _ppjoin_pairs stays the named demo twin after the round-9 re-point;
-    # its output must remain identical to the deployed substrate engine.
-    sh = doc_shingles(spark, ORACLE_SF)
-    assert _pairs_key(_ppjoin_pairs(spark, ORACLE_SF).toPandas()) == _pairs_key(
-        _split_pairs_from(sh).toPandas()
-    )
+    # must not drop or distort pairs, and channel 2 carries every pair.
+    _assert_equals_naive(doc_shingles(spark, ORACLE_SF), measure, hot_df=0)
 
 
 # ---- property suite: synthetic corpora, adversarial vocabulary shapes ----
@@ -96,8 +89,9 @@ _PROP_SETTINGS = dict(
 
 # Tiny vocabulary (heavy sharing: most shingles go hot at low caps; lots
 # of ties), variable doc sizes including docs smaller than the shingle
-# set of others (stresses the length filter), duplicate docs (jaccard
-# exactly 1), and empty corpora.
+# set of others (stresses the length filter and containment's
+# small-inside-large case), duplicate docs (score exactly 1), and empty
+# corpora.
 _shingle_id = st.integers(min_value=0, max_value=9)
 _doc = st.lists(_shingle_id, min_size=1, max_size=8)
 _corpus = st.lists(_doc, min_size=0, max_size=12)
@@ -114,60 +108,13 @@ def _sh_df(spark, corpus):
     )
 
 
-@given(
-    corpus=_corpus,
-    hot_df=st.sampled_from([0, 1, 2, 100]),
-    use_prefix=st.booleans(),
-)
+@given(corpus=_corpus, hot_df=st.sampled_from([0, 1, 2, 100]))
 @settings(**_PROP_SETTINGS)
-def test_pair_engine_property_equivalence(spark, corpus, hot_df, use_prefix):
-    from mdb_to_postgres_spark.extensions.dedup import _naive_pairs_from, _pairs_from
-
-    sh = _sh_df(spark, corpus)
-    fast = _pairs_key(
-        _pairs_from(sh, hot_df=hot_df, use_prefix_candidates=use_prefix).toPandas()
-    )
-    naive = _pairs_key(_naive_pairs_from(sh).toPandas())
-    assert fast == naive
-
-
-def test_containment_split_equals_naive(spark):
-    from mdb_to_postgres_spark.extensions.dedup import (
-        _containment_from,
-        _naive_containment_from,
-        doc_shingles,
-    )
-
-    sh = doc_shingles(spark, ORACLE_SF)
-
-    def key(pdf):
-        pdf = pdf.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-        return list(
-            zip(pdf.doc_a, pdf.doc_b, pdf.containment.round(12), pdf.jaccard.round(12))
-        )
-
-    for cap in (64, 2, 0):
-        fast = key(_containment_from(sh, hot_df=cap).toPandas())
-        naive = key(_naive_containment_from(sh).toPandas())
-        assert fast == naive and len(fast) > 0, f"cap={cap}"
+def test_pair_engine_property_equivalence(spark, corpus, hot_df):
+    _assert_equals_naive(_sh_df(spark, corpus), "jaccard", hot_df, nonempty=False)
 
 
 @given(corpus=_corpus, hot_df=st.sampled_from([0, 1, 2, 100]))
 @settings(**_PROP_SETTINGS)
 def test_containment_property_equivalence(spark, corpus, hot_df):
-    from mdb_to_postgres_spark.extensions.dedup import (
-        _containment_from,
-        _naive_containment_from,
-    )
-
-    sh = _sh_df(spark, corpus)
-
-    def key(pdf):
-        pdf = pdf.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-        return list(
-            zip(pdf.doc_a, pdf.doc_b, pdf.containment.round(12), pdf.jaccard.round(12))
-        )
-
-    assert key(_containment_from(sh, hot_df=hot_df).toPandas()) == key(
-        _naive_containment_from(sh).toPandas()
-    )
+    _assert_equals_naive(_sh_df(spark, corpus), "containment", hot_df, nonempty=False)

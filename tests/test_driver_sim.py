@@ -1,9 +1,8 @@
-"""The census tooling is load-bearing evidence machinery (like the
-registry rotation and the bench payload, both tested): a comparator bug
-records false greens, a status bug records a real mismatch as
-'did not complete'. So the round-12 additions — the banded full-value
-comparator for >20M-row outputs and the consolidator's fail status — are
-tested, not assumed."""
+"""tools/driver_sim.py replays the `__spark_entry__.py` oracle compare
+over every query, so its comparator is load-bearing evidence machinery:
+a dtype-class bug or a banded-compare bug records false greens. The
+banded full-value comparator for >20M-row outputs and the dtype
+normaliser are tested, not assumed."""
 
 from __future__ import annotations
 
@@ -16,48 +15,7 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from tools import consolidate_sf10_census as census  # noqa: E402
 from tools import driver_sim  # noqa: E402
-
-
-# ---------------------------------------------------------------- status_of
-
-def test_status_pass():
-    assert census.status_of({"hash_match": True}) == "pass"
-
-
-def test_status_rows_only():
-    assert census.status_of({"err": "no_oracle", "spark_rows": 5}) == "rows-only"
-
-
-def test_status_rows_schema():
-    r = {"err": "hash_skipped_gt20000000: ...", "rows_match": True, "schema_match": True}
-    assert census.status_of(r) == "rows+schema"
-
-
-def test_status_fail_on_capped_mismatch():
-    # Completed the rows+schema protocol but the counts disagree: a FAIL,
-    # not a coverage gap (the round-11 advice finding — the old code fell
-    # through to 'not-run' and the never-downgrade rank then let any
-    # earlier pass permanently mask it).
-    r = {"err": "hash_skipped_gt20000000: ...", "rows_match": False, "schema_match": True}
-    assert census.status_of(r) == "fail"
-
-
-def test_status_fail_on_hash_mismatch():
-    # Both sides ran to completion (err empty), values differ.
-    r = {"hash_match": False, "rows_match": True, "schema_match": True, "err": None}
-    assert census.status_of(r) == "fail"
-
-
-def test_status_not_run_on_exception():
-    assert census.status_of({"err": "OutOfMemoryError: ..."}) == "not-run"
-    assert census.status_of({}) == "not-run"
-
-
-def test_fail_outranks_pass():
-    # A surfaced fail must never be silently absorbed by an earlier green.
-    assert census.RANK["fail"] > census.RANK["pass"]
 
 
 # ---------------------------------------------------------------- dtypes

@@ -155,7 +155,7 @@ def test_build_memo_is_lru_bounded(spark, monkeypatch):
 
 
 def test_pair_stats_substrate_is_shared(spark):
-    """The Jaccard pair list and the containment engine must consume ONE
+    """The Jaccard pair list and the containment query must consume ONE
     (dfreq, doc_stats) build per (session, sf) — the round-10 headline
     structure-sharing item."""
     from mdb_to_postgres_spark.extensions import dedup
@@ -175,7 +175,7 @@ def test_pair_stats_substrate_is_shared(spark):
 def test_containment_with_substrate_equals_standalone(spark):
     """Injecting the session substrate must not change a single pair."""
     from mdb_to_postgres_spark.extensions.dedup import (
-        _containment_from,
+        _pairs_from,
         doc_pair_stats,
         doc_shingles,
     )
@@ -186,9 +186,9 @@ def test_containment_with_substrate_equals_standalone(spark):
         for a, b, c, j in pdf[["doc_a", "doc_b", "containment", "jaccard"]].values
     )
     with_stats = key(
-        _containment_from(sh, stats=doc_pair_stats(spark, SMOKE_SF)).toPandas()
+        _pairs_from(sh, "containment", stats=doc_pair_stats(spark, SMOKE_SF)).toPandas()
     )
-    standalone = key(_containment_from(sh).toPandas())
+    standalone = key(_pairs_from(sh, "containment").toPandas())
     assert with_stats == standalone
 
 

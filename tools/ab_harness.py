@@ -10,7 +10,8 @@ Usage from a driver script:
   columns, sorted rows, exact string render) and compared EXACTLY — a
   variant that changes any value/row/column fails loudly.
 - timing: build+count per rep, A/B interleaved so window drift cancels;
-  reports min and median of each side.
+  reports min, quartiles and median of each side and returns both lists
+  of per-rep seconds.
 """
 
 from __future__ import annotations
@@ -51,7 +52,9 @@ def ab_compare(spark, sf_dir, name, build_a, build_b, reps=5, check=True):
 
     def stats(ts):
         s = sorted(ts)
-        return f"min {s[0]:.3f}s med {s[len(s) // 2]:.3f}s"
+        q = lambda f: s[min(len(s) - 1, int(f * len(s)))]  # noqa: E731
+        return f"min {s[0]:.3f}s q1 {q(0.25):.3f}s med {q(0.5):.3f}s q3 {q(0.75):.3f}s"
 
     print(f"{name}: A {stats(ta)} | B {stats(tb)} | speedup(min) {min(ta) / min(tb):.2f}x")
-    return min(ta), min(tb)
+    print(f"{name}: A reps {[round(t, 3) for t in ta]} | B reps {[round(t, 3) for t in tb]}")
+    return ta, tb

@@ -22,7 +22,7 @@ REPR = [
     ("win_attribution_last_touch", "union + running last_value, one user shuffle"),
     ("scan_partition_pruned", "PartitionFilters prune directories at planning time"),
     ("join_geo_grid_nearest", "grid-blocked spatial NN: 9x broadcast cells + packed-min argmin"),
-    ("x_dedup_prefix_filter_join", "split-verify tail: survivor checkpoint + broadcast hot-array rescore (the PPJoin candidate + cold-match build plans materialize INSIDE the localCheckpoint — see dedup._ppjoin_from)"),
+    ("x_dedup_prefix_filter_join", "split-verify tail: survivor checkpoint + broadcast hot-array rescore (the cold-match build plan materializes INSIDE the localCheckpoint — see dedup._pairs_from)"),
     ("agg_kmv_distinct_sketch", "KMV order-statistics sketch: per-group k-minima"),
     ("x_rec_item_cooccurrence", "basket-blocked pair generation; stats joins broadcast"),
     ("x_privacy_k_anonymity", "class-level audit: pure aggregation, zero joins"),
