@@ -13,8 +13,9 @@ Rows are serialized to COPY text format in the executor (tab-delimited,
 ``\\N`` for NULL), the exact wire format pg_dump/pg_restore use.
 
 DDL comes from the same Spark->Postgres type map the schema-extraction
-operator uses (operators/scans.py §1.2 matrix), so a table created here is
-what the reference's ``mdb-schema ... postgres`` stage would have created.
+operator uses (etl/typemap.py ``pg_type``, §1.2 matrix), so a table created
+here is what the reference's ``mdb-schema ... postgres`` stage would have
+created. Array columns land as JSONB, written as ``to_json`` text.
 
 Auth note: connections shell out to ``psql`` as the ``postgres`` OS user
 (peer auth) — the zero-config path on a stock Debian Postgres. Pass a
@@ -27,26 +28,10 @@ import shlex
 import subprocess
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# Spark -> Postgres DDL types (§1.2 matrix, sink direction).
-_SPARK_TO_PG: dict[str, str] = {
-    "long": "BIGINT",
-    "bigint": "BIGINT",
-    "int": "INTEGER",
-    "integer": "INTEGER",
-    "smallint": "SMALLINT",
-    "short": "SMALLINT",
-    "byte": "SMALLINT",
-    "double": "DOUBLE PRECISION",
-    "float": "REAL",
-    "string": "TEXT",
-    "boolean": "BOOLEAN",
-    "timestamp": "TIMESTAMP",
-    "timestamp_ntz": "TIMESTAMP",
-    "date": "DATE",
-    "binary": "BYTEA",
-}
+from .typemap import pg_type
 
 DEFAULT_PSQL = ("su", "postgres", "-c")
 
@@ -55,16 +40,6 @@ def _ident(name: str) -> str:
     """Quoted Postgres identifier — embedded quotes doubled per the SQL
     standard, so arbitrary source column/table names can't break out."""
     return '"' + name.replace('"', '""') + '"'
-
-
-def pg_type(dt: T.DataType) -> str:
-    simple = dt.simpleString()
-    if simple.startswith("decimal"):
-        return simple.upper().replace("DECIMAL", "NUMERIC")
-    try:
-        return _SPARK_TO_PG[simple]
-    except KeyError:
-        raise ValueError(f"no Postgres mapping for Spark type {simple}") from None
 
 
 def create_table_ddl(schema: T.StructType, table: str) -> str:
@@ -117,8 +92,11 @@ def copy_into_postgres(
 ) -> None:
     """Bulk-load a DataFrame via parallel executor-side COPY streams."""
     if create:
-        run_psql(f"DROP TABLE IF EXISTS {_ident(table)}", dbname)
-        run_psql(create_table_ddl(df.schema, table), dbname)
+        ddl = create_table_ddl(df.schema, table)
+        run_psql(f"DROP TABLE IF EXISTS {_ident(table)}; {ddl}", dbname)
+    arrays = [f.name for f in df.schema.fields if isinstance(f.dataType, T.ArrayType)]
+    if arrays:
+        df = df.withColumns({n: F.to_json(n) for n in arrays})
 
     fields = [(f.name, f.dataType) for f in df.schema.fields]
     quoted = ", ".join(_ident(n) for n, _ in fields)

@@ -34,6 +34,39 @@ _MAP: dict[str, tuple[str, T.DataType]] = {
 JET_TO_POSTGRES: dict[str, str] = {k: v[0] for k, v in _MAP.items()}
 JET_TO_SPARK: dict[str, T.DataType] = {k: v[1] for k, v in _MAP.items()}
 
+# Spark DataType.simpleString() -> Postgres DDL type (§1.2 matrix, sink
+# direction): the COPY sink's CREATE TABLE and extract_schema both use it.
+_SPARK_TO_PG: dict[str, str] = {
+    "tinyint": "SMALLINT",
+    "smallint": "SMALLINT",
+    "int": "INTEGER",
+    "bigint": "BIGINT",
+    "float": "REAL",
+    "double": "DOUBLE PRECISION",
+    "string": "TEXT",
+    "boolean": "BOOLEAN",
+    "timestamp": "TIMESTAMP",
+    "timestamp_ntz": "TIMESTAMP",
+    "date": "DATE",
+    "binary": "BYTEA",
+}
+
+
+def pg_type(dt: T.DataType) -> str:
+    """Postgres DDL type of a Spark column type. Arrays map to JSONB, the
+    type extract_schema's oracle pins for the embeddings column (a native
+    REAL[] would change that row); the COPY sink writes them as JSON text."""
+    simple = dt.simpleString()
+    if simple.startswith("decimal"):
+        return simple.upper().replace("DECIMAL", "NUMERIC")
+    if isinstance(dt, T.ArrayType):
+        return "JSONB"
+    try:
+        return _SPARK_TO_PG[simple]
+    except KeyError:
+        raise ValueError(f"no Postgres mapping for Spark type {simple}") from None
+
+
 # JET date serials count days from this epoch (public JET format fact).
 JET_EPOCH = "1899-12-30"
 

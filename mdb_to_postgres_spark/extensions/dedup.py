@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..registry import query
-from ..sources.tables import T
+from ..sources.tables import T, session_cache_get
 
 # Shared tokenization: lowercase, split on single spaces (corpus text is
 # single-spaced lowercase words; the normalized variant handles messier
@@ -120,9 +120,6 @@ _JACCARD_ORACLE = """
 """
 
 
-_JACCARD_PAIR_CACHE: dict = {}
-
-
 @query("x_dedup_near_jaccard", oracle=_JACCARD_ORACLE)
 def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup (#60, deterministic variant): the
@@ -137,14 +134,12 @@ def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot/cold split verify — no term quadratic in boilerplate shingle df),
     which is provably and test-asserted identical to the naive
     inverted-index self-join this query's DuckDB oracle runs."""
-    from ..sources.tables import session_cache_get
-
     def build() -> DataFrame:
         return _pairs_from(
             doc_shingles(spark, sf_dir), "jaccard", stats=doc_pair_stats(spark, sf_dir)
         ).localCheckpoint()
 
-    return session_cache_get(_JACCARD_PAIR_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "dedup.jaccard_pairs", build)
 
 
 # Document-frequency cap splitting the exact verify: shingles with df
@@ -368,8 +363,6 @@ def _minhash_coeffs() -> list[tuple[int, int]]:
 
 _MINHASH_AB = _minhash_coeffs()
 
-_INCR_BASE_CACHE: dict = {}
-
 
 def _minhash_oracle() -> str:
     """DuckDB mirror of the universal-hash MinHash+LSH pipeline below,
@@ -486,9 +479,6 @@ def _verify_jaccard(
     return out.select("doc_a", "doc_b", "jaccard")
 
 
-_LSH_BANDS_CACHE: dict = {}
-
-
 def _minhash_lsh_pairs(
     spark: SparkSession, sf_dir: str, h_col, band_sig, kernel: str
 ) -> DataFrame:
@@ -506,13 +496,11 @@ def _minhash_lsh_pairs(
     saveAsTable variant, join_bucketed_dedup_verify, IS that table);
     rebuilding it on every call re-ran the full per-shingle hash + 32-way
     min aggregation (the dominant cost of both registered variants)."""
-    from ..sources.tables import session_cache_get
-
     sh = doc_shingles(spark, sf_dir)
     bands = session_cache_get(
-        _LSH_BANDS_CACHE,
         spark,
-        f"{sf_dir}::{kernel}",
+        sf_dir,
+        f"dedup.lsh_bands::{kernel}",
         lambda: _minhash_bands(sh, h_col, band_sig).localCheckpoint(),
     )
     cand = (
@@ -587,12 +575,10 @@ def x_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (bands 0.21 s -> ckpt+count 0.65 s). Interleaved A/B: 1.24 -> 1.08 s
     # min per call, bit-equal. At 100 TB the trade holds: two delta-sized
     # map passes beat materializing a per-batch index copy on the heap.
-    from ..sources.tables import session_cache_get
-
     base_bands = session_cache_get(
-        _INCR_BASE_CACHE,
         spark,
         sf_dir,
+        "dedup.incr_base",
         lambda: _minhash_bands(sh.filter(~is_delta), h_col, band_sig).localCheckpoint(),
     )
     delta_bands = _minhash_bands(sh.filter(is_delta), h_col, band_sig)
@@ -673,9 +659,6 @@ def _simhash_oracle() -> str:
     """
 
 
-_SIMHASH_CHUNK_CACHE: dict = {}
-
-
 def _simhash_pairs(spark: SparkSession, sf_dir: str, h_sql: str) -> DataFrame:
     """Shared SimHash topology: token -> 60-bit hash (``h_sql``, a SQL
     expression over column ``tok``) -> per-bit +/-1 sums -> sign signature
@@ -713,12 +696,10 @@ def _simhash_pairs(spark: SparkSession, sf_dir: str, h_sql: str) -> DataFrame:
     # (the signature build — token explode + 60-way bit sums — dominates
     # both variants; like the banded MinHash index it is the table a
     # production run persists once per snapshot).
-    from ..sources.tables import session_cache_get
-
     chunks = session_cache_get(
-        _SIMHASH_CHUNK_CACHE,
         spark,
-        f"{sf_dir}::{h_sql}",
+        sf_dir,
+        f"dedup.simhash_chunks::{h_sql}",
         lambda: sim.select(
             "doc_id",
             "simhash",
@@ -773,27 +754,17 @@ def x_dedup_simhash_xxh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Converged component tables, cached per (applicationId, sf_dir) so
-# downstream cluster consumers don't re-run the iteration (see
-# x_dedup_components docstring).
-_COMP_CACHE: dict[tuple[str, str], DataFrame] = {}
-
 # The (doc_id, shingle) inverted index is the shared substrate of every
 # shingle-based operator (Jaccard, MinHash banding, contamination scan) —
 # materialize it once per (session, sf) instead of re-exploding the corpus
 # per query. At 100 TB this is the index a pipeline writes to parquet once
 # per snapshot; localCheckpoint is the in-session equivalent.
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cached distinct word-trigram index over the documents table."""
-    from ..sources.tables import session_cache_get
-
     return session_cache_get(
-        _SHINGLE_CACHE,
         spark,
         sf_dir,
+        "dedup.shingles",
         lambda: _shingles(T(spark, sf_dir, "documents"), 3).localCheckpoint(),
     )
 
@@ -808,9 +779,6 @@ def doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # tables once per (applicationId, sf_dir) — at 100 TB these are the
 # vocabulary/doc-stats sidecars a dedup pipeline persists beside the
 # inverted index, rebuilt per snapshot, not per query.
-_PAIR_STATS_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _build_pair_stats(sh: DataFrame, hot_df: int) -> tuple[DataFrame, DataFrame]:
     """(dfreq, doc_stats) for one (doc_id, shingle) table and hot cap:
     dfreq = per-shingle document frequency (vocab-sized, broadcastable);
@@ -840,12 +808,10 @@ def doc_pair_stats(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     """Session-cached (dfreq, doc_stats) over doc_shingles at the deployed
     hot cap (_HOT_DF) — the substrate shared by the Jaccard and
     containment measures of _pairs_from."""
-    from ..sources.tables import session_cache_get
-
     return session_cache_get(
-        _PAIR_STATS_CACHE,
         spark,
         sf_dir,
+        "dedup.pair_stats",
         lambda: _build_pair_stats(doc_shingles(spark, sf_dir), _HOT_DF),
     )
 
@@ -915,52 +881,45 @@ def x_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     — downstream consumers (x_dedup_canonical) reuse the materialized
     clusters instead of re-running the iteration, exactly as a production
     pipeline materializes the cluster table once per corpus snapshot."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in _COMP_CACHE if k[0] != app]:  # stale-session eviction
-        del _COMP_CACHE[k]
-    cached = _COMP_CACHE.get((app, sf_dir))
-    if cached is not None:
-        comp = cached
-        sizes = comp.groupBy("component_id").agg(F.count("*").alias("component_size"))
-        return comp.join(sizes, "component_id").select(
-            "doc_id", "component_id", "component_size"
+
+    def build() -> DataFrame:
+        pairs = x_dedup_near_jaccard(spark, sf_dir).select("doc_a", "doc_b")
+        fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
+        edges = (
+            fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .repartition("a")
+            .localCheckpoint()
         )
-    pairs = x_dedup_near_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    fwd = pairs.select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-    edges = (
-        fwd.union(fwd.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .repartition("a")
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
-    ).localCheckpoint()
-    cur_sum = labels.agg(F.sum("label")).collect()[0][0]
-    max_rounds = 50
-    for rounds in range(1, max_rounds + 1):
-        prop = edges.join(
-            labels.select(F.col("node").alias("a"), "label"), "a"
-        ).select(F.col("b").alias("node"), "label")
         labels = (
-            labels.unionByName(prop)
-            .repartition("node")
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            edges.select(F.col("a").alias("node")).distinct().withColumn("label", F.col("node"))
         ).localCheckpoint()
-        new_sum = labels.agg(F.sum("label")).collect()[0][0]
-        if new_sum == cur_sum:  # min-labels are monotone; equal sum = fixpoint
-            break
-        cur_sum = new_sum
-    else:  # never silently return split components on a deep chain graph
-        raise RuntimeError(
-            f"component propagation did not converge in {max_rounds} rounds "
-            "(graph diameter exceeds the bound; raise max_rounds or switch "
-            "to large/small-star doubling)"
-        )
-    comp = labels.select(
-        F.col("node").alias("doc_id"), F.col("label").alias("component_id")
-    ).localCheckpoint()
-    _COMP_CACHE[(app, sf_dir)] = comp
+        cur_sum = labels.agg(F.sum("label")).collect()[0][0]
+        max_rounds = 50
+        for rounds in range(1, max_rounds + 1):
+            prop = edges.join(
+                labels.select(F.col("node").alias("a"), "label"), "a"
+            ).select(F.col("b").alias("node"), "label")
+            labels = (
+                labels.unionByName(prop)
+                .repartition("node")
+                .groupBy("node")
+                .agg(F.min("label").alias("label"))
+            ).localCheckpoint()
+            new_sum = labels.agg(F.sum("label")).collect()[0][0]
+            if new_sum == cur_sum:  # min-labels are monotone; equal sum = fixpoint
+                break
+            cur_sum = new_sum
+        else:  # never silently return split components on a deep chain graph
+            raise RuntimeError(
+                f"component propagation did not converge in {max_rounds} rounds "
+                "(graph diameter exceeds the bound; raise max_rounds or switch "
+                "to large/small-star doubling)"
+            )
+        return labels.select(
+            F.col("node").alias("doc_id"), F.col("label").alias("component_id")
+        ).localCheckpoint()
+
+    comp = session_cache_get(spark, sf_dir, "dedup.components", build)
     sizes = comp.groupBy("component_id").agg(F.count("*").alias("component_size"))
     return comp.join(sizes, "component_id").select("doc_id", "component_id", "component_size")
 

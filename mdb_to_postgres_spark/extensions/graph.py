@@ -30,14 +30,11 @@ _PR_DEC = "DECIMAL(28,15)"
 # query here — materialized once per (session, sf) like the shingle index
 # it derives from (at 100 TB this is the edge table a pipeline writes once
 # per corpus snapshot).
-_PAIR_CACHE: dict = {}
-
-
 def _sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cache_get(
-        _PAIR_CACHE,
         spark,
         sf_dir,
+        "graph.pairs",
         lambda: x_dedup_near_jaccard(spark, sf_dir)
         .select("doc_a", "doc_b")
         .localCheckpoint(),

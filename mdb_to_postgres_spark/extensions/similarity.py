@@ -23,8 +23,6 @@ from ..registry import query
 from ..sources.tables import T, session_cache_get
 
 # -- shared cosine machinery (fold order matches DuckDB list_reduce) -----
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
@@ -93,9 +91,6 @@ def _parallelize(df: DataFrame) -> DataFrame:
 # (session, sf) via localCheckpoint — the in-session equivalent of the
 # flattened projection table a production pipeline writes next to the
 # embedding parquet.
-_FLAT_CORPUS_CACHE: dict = {}
-
-
 def flat_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         e = T(spark, sf_dir, "embeddings")
@@ -103,7 +98,7 @@ def flat_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             flat_emb(e.filter(F.col("vec_id") >= 20), "neighbor_id", "c")
         ).localCheckpoint()
 
-    return session_cache_get(_FLAT_CORPUS_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.flat_corpus", build)
 
 
 # DuckDB twin of the fold above. list_reduce has no init; the implicit
@@ -266,11 +261,8 @@ def _lsh_codes(e: DataFrame, id_col: str) -> DataFrame:
 
 # Corpus-side LSH code table: the persisted bucket index of a real LSH
 # deployment (encode once per corpus snapshot, probe forever). Cached per
-# (session, sf) like flat_corpus/_LSH_BUCK_CACHE — only the 20 query
+# (session, sf) like flat_corpus/_lsh_buckets — only the 20 query
 # vectors' codes are computed per call.
-_LSH_CODES_CACHE: dict = {}
-
-
 def _lsh_corpus_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         e = T(spark, sf_dir, "embeddings")
@@ -279,7 +271,7 @@ def _lsh_corpus_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _lsh_codes(c_raw, "neighbor_id").localCheckpoint()
 
-    return session_cache_get(_LSH_CODES_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.lsh_codes", build)
 
 
 @query("x_sim_ann_lsh")  # rows-only: random hyperplanes are engine-specific
@@ -325,7 +317,6 @@ _NPROBE = 8  # random (clusterless) corpora are IVF's worst case; probe wide
 # stride 25/44 — sf0.001/0.01 unchanged), and is integer-exact in both
 # engines: ceil(sqrt) of a BIGINT is reproducible (IEEE sqrt is correctly
 # rounded; math.isqrt on the Python side avoids float entirely).
-_STRIDE_CACHE: dict = {}
 
 # GREATEST(..., 1) guards the empty-table divisor (CEIL(SQRT(0)) = 0), for
 # parity with the Python n == 0 branch below.
@@ -339,17 +330,12 @@ _STRIDE_SQL = (
 def _centroid_stride(spark: SparkSession, sf_dir: str) -> int:
     import math
 
-    from ..sources.tables import session_cache_get
-
     def build() -> int:
         n = T(spark, sf_dir, "embeddings").count()
         r = math.isqrt(n - 1) + 1 if n > 0 else 1  # = ceil(sqrt(n))
         return max(_N_CENTROIDS_MOD, n // r)
 
-    # session_cache_get for the stale-appId eviction hygiene the other
-    # substrate memos follow (ADVICE r8) — harmless int values, but a
-    # stopped session's keys should not accumulate in long-lived processes.
-    return session_cache_get(_STRIDE_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.strides", build)
 
 
 def _ivf_oracle() -> str:
@@ -407,9 +393,6 @@ def _ivf_oracle() -> str:
 # re-flattened 64 casts + a norm just to rebuild the same codebook
 # (round 12, guide §6: the probes subtree alone measured 0.41 s min of a
 # 1.24 s call at sf0.1). Cached per (session, sf) like flat_corpus.
-_FLAT_CENT_CACHE: dict = {}
-
-
 def flat_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         e = T(spark, sf_dir, "embeddings")
@@ -419,16 +402,13 @@ def flat_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
             "t",
         ).localCheckpoint()
 
-    return session_cache_get(_FLAT_CENT_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.flat_centroids", build)
 
 
 # The thin (neighbor_id, centroid_id) seed-centroid assignment is shared
 # by x_sim_ann_ivf and x_sim_ann_filtered — the same inverted-list table a
 # production deployment persists once and every query probes. Cached per
 # (session, sf) like flat_corpus.
-_IVF_ASSIGN_CACHE: dict = {}
-
-
 def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assign every corpus vector to its nearest seed centroid. Computed
     THIN — (vector_id, centroid_id) only via max_by with a (sim, -id)
@@ -454,7 +434,7 @@ def ivf_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return session_cache_get(_IVF_ASSIGN_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.ivf_assign", build)
 
 
 @query("x_sim_ann_ivf", oracle=_ivf_oracle())
@@ -557,9 +537,6 @@ def _assign_thin(corpus: DataFrame, cent: DataFrame, id_col: str) -> DataFrame:
 
 
 # Lloyd-trained centroids, cached per (session, sf): see docstring below.
-_KMEANS_CENT_CACHE: dict = {}
-
-
 @query("x_sim_ann_ivf_kmeans")  # rows-only: Lloyd means are float AVGs,
 # whose value depends on partial-aggregation order — unlike the seed-
 # centroid IVF above, no cross-engine bit-identical oracle exists
@@ -593,7 +570,7 @@ def x_sim_ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
             cent = means.withColumn("tnorm", F.expr(f"SQRT({sq})")).localCheckpoint()
         return cent
 
-    cent = session_cache_get(_KMEANS_CENT_CACHE, spark, sf_dir, train)
+    cent = session_cache_get(spark, sf_dir, "sim.kmeans_centroids", train)
     assigned = corpus.join(_assign_thin(corpus, cent, "neighbor_id"), "neighbor_id")
     q = flat_emb(e.filter(F.col("vec_id") < 20), "query_id", "q")
     q_sim = dot_flat("q", "t") / (F.col("qnorm") * F.col("tnorm"))
@@ -722,9 +699,6 @@ def _lsh_sql_oracle() -> str:
 # (vec_id, table_id, bucket) table is built once per (session, sf) and
 # localCheckpoint'ed — exactly the parquet signature table a production
 # pipeline materializes.
-_LSH_BUCK_CACHE: dict = {}
-
-
 def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         e = T(spark, sf_dir, "embeddings")
@@ -778,7 +752,7 @@ def _lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return buck
 
-    return session_cache_get(_LSH_BUCK_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "sim.lsh_buckets", build)
 
 
 @query("x_sim_ann_lsh_hyperplane", oracle=_lsh_sql_oracle())
@@ -983,10 +957,6 @@ def _pq_oracle() -> str:
     """
 
 
-_PQ_ENC_CACHE: dict = {}
-_PQ_DTAB_CACHE: dict = {}
-
-
 @query("x_sim_ann_ivf_pq", oracle=_pq_oracle())
 def x_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization over the IVF substrate (#62 cont., IVF-PQ):
@@ -1052,9 +1022,9 @@ def x_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vector). The row-per-(neighbor, m) form forced the ADC below through
     # a join + hash agg; the array form lets it finish inside a projection.
     enc = session_cache_get(
-        _PQ_ENC_CACHE,
         spark,
         sf_dir,
+        "sim.pq_encode",
         lambda: (
             sub.join(F.broadcast(cb), "m")
             .select("neighbor_id", "m", "k", l2.alias("l2"))
@@ -1132,7 +1102,7 @@ def x_sim_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             "x.query_id", "neighbor_id", F.expr(f"CAST({dist} AS DOUBLE)").alias("pq_dist")
         )
 
-    adc = session_cache_get(_PQ_DTAB_CACHE, spark, sf_dir, _build_adc)
+    adc = session_cache_get(spark, sf_dir, "sim.pq_dtab", _build_adc)
     w_adc = Window.partitionBy("query_id").orderBy(F.asc("pq_dist"), F.asc("neighbor_id"))
     short = (
         adc.withColumn("arn", F.row_number().over(w_adc))

@@ -540,9 +540,6 @@ def x_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_LM_CACHE: dict = {}
-
-
 @query(
     "x_text_bigram_score",
     oracle="""
@@ -613,7 +610,7 @@ def x_text_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    model = session_cache_get(_BIGRAM_LM_CACHE, spark, sf_dir, train_model)
+    model = session_cache_get(spark, sf_dir, "text.bigram_lm_model", train_model)
     scored = bg.filter(F.col("doc_id") < 300).join(model, "bigram")
     return scored.groupBy("doc_id").agg(
         F.count("*").alias("n_bigrams"),
@@ -774,9 +771,6 @@ FROM cnt GROUP BY doc_id
 # ~3x smaller than the occurrence stream and materializes once per
 # (session, sf) — the trigram profile table a production text-QA stage
 # writes beside the corpus).
-_TRIGRAM_CACHE: dict = {}
-
-
 def doc_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         # rebalance before the per-char explode (single-split corpus
@@ -799,7 +793,7 @@ def doc_trigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return session_cache_get(_TRIGRAM_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "text.trigrams", build)
 
 
 @query("x_text_qgram_spectrum", oracle=_QGRAM_SQL)
@@ -936,7 +930,6 @@ _BM25_TERMS = ("hash", "join", "filter")
 # The (doc_id, dlen, tf-per-query-term) index table — the persisted
 # artifact of a BM25 deployment, cached per (session, sf) like
 # flat_corpus.
-_BM25_INDEX_CACHE: dict = {}
 _BM25_K1, _BM25_B = 1.2, 0.75
 
 _BM25_SQL = f"""
@@ -999,9 +992,9 @@ def x_text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins against it). All counts are integers — bit-identical to the
     # two-pass form.
     per_doc = session_cache_get(
-        _BM25_INDEX_CACHE,
         spark,
         sf_dir,
+        "text.bm25_index",
         lambda: tok.groupBy("doc_id")
         .agg(
             F.count("*").alias("dlen"),
@@ -1309,9 +1302,6 @@ _NGRAM_LANGS = ("de", "en", "es", "fr", "zh")
 _NGRAM_TOP = 20
 # Trained language profiles are a per-corpus substrate (like the shingle
 # index): deterministic, tiny (langs x top-k rows), reused across calls.
-_NGRAM_PROF_CACHE: dict = {}
-
-
 @query(
     "x_text_langid_ngram",
     oracle=f"""
@@ -1406,7 +1396,7 @@ def x_text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    prof = session_cache_get(_NGRAM_PROF_CACHE, spark, sf_dir, train_profile)
+    prof = session_cache_get(spark, sf_dir, "text.ngram_profiles", train_profile)
     scores = (
         grams.join(F.broadcast(prof), "g")
         .groupBy("doc_id", "lang")
@@ -1825,7 +1815,6 @@ def x_text_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Trained char-bigram model: a per-corpus substrate like the trigram
 # profiles — at most |alphabet|^2 (bigram -> ppm) ints, reused across calls.
-_CHAR_LM_MODEL_CACHE: dict = {}
 
 # Map-literal scoring is only "map-only and cheap" while the model stays
 # alphabet²-small: element_at on create_map is a linear scan and the plan
@@ -1930,7 +1919,7 @@ def x_text_char_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same O(1)-class probe as the global-order offsets.
         return {r["bigram"]: r["p_ppm"] for r in model.collect()}
 
-    ppm = session_cache_get(_CHAR_LM_MODEL_CACHE, spark, sf_dir, train_model)
+    ppm = session_cache_get(spark, sf_dir, "text.char_lm_model", train_model)
     d = (
         T(spark, sf_dir, "documents")
         .filter(F.length("text") >= 2)

@@ -15,12 +15,10 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import CHARGE_EXPR, davg, dsum
 from ..registry import query
-from ..sources.tables import T
+from ..sources.tables import T, session_cache_get
 
-# Session-cached checkpointed entity tables feeding the global-order
-# substrate (fresh per-call lineages defeat its build memo — z-order lesson).
-_SKEW_COUNTS_CACHE: dict = {}
-_KS_PV_CACHE: dict = {}
+# Checkpointed entity tables feeding the global-order substrate are session
+# substrates (fresh per-call lineages defeat its build memo — z-order lesson).
 
 
 @query(
@@ -952,12 +950,10 @@ def agg_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     with no single-partition window over the key set."""
     from ..functions.global_order import global_row_number
 
-    from ..sources.tables import session_cache_get
-
     counts = session_cache_get(
-        _SKEW_COUNTS_CACHE,
         spark,
         sf_dir,
+        "agg.skew_counts",
         lambda: T(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(F.count("*").alias("cnt"))
@@ -1571,12 +1567,10 @@ def agg_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col("event_type") == "click", 1).otherwise(0).alias("g1"),
         F.when(F.col("event_type") == "error", 1).otherwise(0).alias("g2"),
     )
-    from ..sources.tables import session_cache_get
-
     pv = session_cache_get(
-        _KS_PV_CACHE,
         spark,
         sf_dir,
+        "agg.ks_pv",
         lambda: s.groupBy("v").agg(
             F.sum("g1").cast("bigint").alias("n1_v"),
             F.sum("g2").cast("bigint").alias("n2_v"),

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..functions.compat import REVENUE_EXPR
 from ..registry import query
-from ..sources.tables import T, events_ts, ev_sec_sql
+from ..sources.tables import T, events_ts, ev_sec_sql, session_cache_get
 from .asof import asof_join, range_join
 
 # Epoch-seconds view of events: all as-of/range logic runs on BIGINT
@@ -632,12 +632,7 @@ def join_geo_grid_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ones. Built once per (session, sf) — the self-join over order baskets is
 # the dominant cost of both queries (at 100 TB this is the pair table a
 # pipeline materializes next to the fact table).
-_ORDER_PAIR_CACHE: dict = {}
-
-
 def order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.tables import session_cache_get
-
     def build() -> DataFrame:
         items = T(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey").distinct()
         a = items.select("l_orderkey", F.col("l_partkey").alias("pa"))
@@ -650,7 +645,7 @@ def order_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint()
         )
 
-    return session_cache_get(_ORDER_PAIR_CACHE, spark, sf_dir, build)
+    return session_cache_get(spark, sf_dir, "joins.order_pairs", build)
 
 
 @query(

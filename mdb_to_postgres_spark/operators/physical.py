@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
-from ..sources.tables import T
+from ..sources.tables import T, session_cache_get
 from .scans import _cache_complete, _cache_dir
 
 _N_BUCKETS = 8
@@ -319,9 +319,6 @@ def _morton_sql(x: str, y: str, duck: bool) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-_MORTON_CACHE: dict = {}
-
-
 @query(
     "sort_zorder_cluster",
     oracle=f"""
@@ -364,7 +361,6 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-table scan cost at 100 TB, where the thin projection is a small
     fraction of the table's width)."""
     from ..functions.global_order import global_row_number, ntile_from_rn
-    from ..sources.tables import session_cache_get
 
     def build_morton() -> DataFrame:
         return (
@@ -385,7 +381,7 @@ def sort_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     # order build memo — every call produced a fresh RDD lineage, so the
     # quantile/counts jobs re-ran (and re-paid the 64-term interleave's
     # downstream bucket evaluation) on every invocation.
-    z = session_cache_get(_MORTON_CACHE, spark, sf_dir, build_morton)
+    z = session_cache_get(spark, sf_dir, "phys.morton", build_morton)
     # codegen_bucket: this call evaluates the 63-boundary bucket over the
     # full fact substrate EVERY call and the plan is thin — the compiled
     # indicator sum beats the interpreted HOF 1.57 -> 1.08 s at sf0.1

@@ -18,11 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..registry import query
-from ..sources.tables import T as tbl
-
-# Session-cached user-key dim input (feeds the global-order substrate;
-# a per-call localCheckpoint would defeat its build memo).
-_STAR_USERKEYS_CACHE: dict = {}
+from ..sources.tables import T as tbl, session_cache_get
 
 _CACHE = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".cache")
 
@@ -212,32 +208,16 @@ def list_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
 def extract_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema extraction + translation (#3) — the reference's
     `mdb-schema db.mdb postgres`. Emits (column, spark_type, postgres_type)
-    for every corpus table, using the §1.2 JET map for blob/text kinds."""
-    rows = []
+    for every corpus table, with the COPY sink's own Spark->Postgres map
+    (etl.typemap.pg_type)."""
+    from ..etl.typemap import pg_type
     from ..sources.tables import TABLES
 
-    spark_to_pg = {
-        "bigint": "BIGINT",
-        "int": "INTEGER",
-        "smallint": "SMALLINT",
-        "double": "DOUBLE PRECISION",
-        "float": "REAL",
-        "string": "TEXT",
-        "boolean": "BOOLEAN",
-        "timestamp": "TIMESTAMP",
-        "timestamp_ntz": "TIMESTAMP",
-        "binary": "BYTEA",
-        "date": "DATE",
-    }
-    for t in TABLES:
-        for f in tbl(spark, sf_dir, t).schema.fields:
-            simple = f.dataType.simpleString()
-            pg = spark_to_pg.get(simple)
-            if pg is None and simple.startswith("decimal"):
-                pg = simple.upper().replace("DECIMAL", "NUMERIC")
-            if pg is None and simple.startswith("array"):
-                pg = "JSONB"  # Postgres has no native float array short of extensions
-            rows.append((t, f.name, simple, pg or "TEXT"))
+    rows = [
+        (t, f.name, f.dataType.simpleString(), pg_type(f.dataType))
+        for t in TABLES
+        for f in tbl(spark, sf_dir, t).schema.fields
+    ]
     return spark.createDataFrame(
         rows, "table_name: string, column_name: string, spark_type: string, postgres_type: string"
     )
@@ -945,12 +925,12 @@ def etl_build_star_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.global_order import global_row_number
 
     ev = tbl(spark, sf_dir, "events")
-    from ..sources.tables import session_cache_get
-
+    # A session substrate: it feeds the global-order substrate, and a
+    # per-call localCheckpoint would defeat its build memo.
     user_keys = session_cache_get(
-        _STAR_USERKEYS_CACHE,
         spark,
         sf_dir,
+        "scans.star_userkeys",
         lambda: ev.select("user_id").distinct().localCheckpoint(),
     )
     dim_user = global_row_number(user_keys, [("user_id", "asc")], "user_sk")

@@ -19,14 +19,10 @@ from pyspark.sql.window import Window
 from ..registry import query
 from ..sources.tables import T, events_ts, ev_sec_sql, session_cache_get
 
-# Session-cached checkpointed entity tables (per-corpus build artifacts):
-# a per-call localCheckpoint creates a fresh lineage that defeats the
-# global-order build memo (the z-order lesson), so each substrate-feeding
-# entity aggregate is materialized once per (session, sf).
-_CONC_BOUNDS_CACHE: dict = {}
-_PARETO_REV_CACHE: dict = {}
-_RFM_ENTITY_CACHE: dict = {}
-
+# Checkpointed entity tables feeding the global-order substrate are session
+# substrates (session_cache_get): a per-call localCheckpoint creates a fresh
+# lineage that defeats the global-order build memo (the z-order lesson), so
+# each is materialized once per (session, sf).
 
 _EV_SEC = ev_sec_sql()  # generation-derived: see sources/tables.py
 
@@ -717,9 +713,9 @@ def win_concurrency_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts_sec").alias("s_start"), (F.max("ts_sec") + 1800).alias("s_end")
     )
     bounds = session_cache_get(
-        _CONC_BOUNDS_CACHE,
         spark,
         sf_dir,
+        "win.concurrency_bounds",
         lambda: sessions.select(
             F.col("s_start").alias("t"), F.lit(1).alias("d")
         ).unionByName(
@@ -1049,9 +1045,9 @@ def win_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     li = T(spark, sf_dir, "lineitem")
     rev = session_cache_get(
-        _PARETO_REV_CACHE,
         spark,
         sf_dir,
+        "win.pareto_revenue",
         lambda: li.groupBy("l_partkey").agg(
             F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).alias("revenue")
         ).localCheckpoint(),
@@ -1559,8 +1555,6 @@ def win_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # -- round-6 additions: sessionized multi-touch attribution, RFM ---------
-
-
 @query(
     "win_funnel_attribution_paths",
     oracle=f"""
@@ -1734,7 +1728,7 @@ def win_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rfm_plan = rfm
     rfm = session_cache_get(
-        _RFM_ENTITY_CACHE, spark, sf_dir, lambda: rfm_plan.localCheckpoint()
+        spark, sf_dir, "win.rfm_entity", lambda: rfm_plan.localCheckpoint()
     )
     # recency/frequency leading keys are LOW-CARDINALITY (day counts /
     # order counts cluster in a handful of values), which would collapse

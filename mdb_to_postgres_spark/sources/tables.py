@@ -30,16 +30,52 @@ TABLES = (
 ALWAYS_BROADCAST = ("region", "nation")
 
 
-# Per-session caches. spark.read.parquet costs a driver<->JVM roundtrip to
-# read the footer schema on EVERY call; a real engine resolves scans against
-# a catalog (metastore) instead of re-deriving the schema per query. Keyed by
-# applicationId so a fresh SparkContext never sees stale plans.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# The session-substrate store: every per-session intermediate (T's scans,
+# localCheckpointed indexes, collected models, staged-table names) of the
+# live application, keyed (sf_dir, name).
+_STORE: dict[tuple[str, str], object] = {}
+_STORE_APP: str | None = None
+
+
+def session_cache_get(spark: SparkSession, sf_dir: str, name: str, build):
+    """Return the session substrate ``name`` for ``sf_dir``, building it
+    once per application with ``build()``.
+
+    ``name`` is a unique label per substrate (``"dedup.shingles"``,
+    ``"sim.flat_corpus"``, ``"tables.df.orders"``, ...); substrates of
+    several sf dirs of one session live side by side.
+
+    Eviction contract: entries built under a stopped SparkSession reference
+    unreachable localCheckpoint blocks and dead-JVM plans, so keeping them
+    leaks memory in long-lived multi-session processes (a pytest run, a
+    harness that restarts sessions). A process has one live SparkContext,
+    so the whole store is dropped the first time a new applicationId asks
+    for anything. Entries of the live session are never evicted: a
+    localCheckpoint's blocks are not freed by dropping the reference, and
+    unpersisting them breaks still-lazy DataFrames derived from them.
+    ``functions.global_order._BUILD_CACHE`` is the one memo kept apart:
+    it is keyed by plan hash and LRU-bounded."""
+    global _STORE_APP
+    app = spark.sparkContext.applicationId
+    if _STORE_APP != app:
+        _STORE.clear()
+        _STORE_APP = app
+    key = (sf_dir, name)
+    if key not in _STORE:
+        _STORE[key] = build()
+    return _STORE[key]
+
+
 _CONF_DONE: set[str] = set()
 
 
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one corpus table (catalog-cached per session).
+
+    spark.read.parquet costs a driver<->JVM roundtrip to read the footer
+    schema on EVERY call; a real engine resolves scans against a catalog
+    (metastore) instead of re-deriving the schema per query, so the scan
+    is a session substrate like any other.
 
     Sets runtime conf needed for determinism against the DuckDB oracle
     even when the caller built the SparkSession without our factory:
@@ -57,31 +93,9 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # own session — so pin it here, not only in our session factory.
         spark.conf.set("spark.sql.ansi.enabled", "false")
         _CONF_DONE.add(app)
-    for k in [k for k in _DF_CACHE if k[0] != app]:  # stale-session eviction
-        del _DF_CACHE[k]
-    key = (app, sf_dir, name)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = _DF_CACHE[key] = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    return df
-
-
-def session_cache_get(cache: dict, spark: SparkSession, sf_dir: str, build):
-    """(applicationId, sf_dir)-keyed memo with stale-session eviction.
-
-    Entries built under a stopped SparkSession reference unreachable
-    localCheckpoint blocks, so keeping them leaks driver memory in
-    long-lived multi-session processes (pytest, the verification driver).
-    Any key whose applicationId differs from the ACTIVE session is dropped
-    before lookup; per-sf entries of the live session are kept (multi-sf
-    use within one session is supported and tested)."""
-    app = spark.sparkContext.applicationId
-    for k in [k for k in cache if k[0] != app]:
-        del cache[k]
-    key = (app, sf_dir)
-    if key not in cache:
-        cache[key] = build()
-    return cache[key]
+    return session_cache_get(
+        spark, sf_dir, f"tables.df.{name}", lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    )
 
 
 def events_ts(spark: SparkSession, sf_dir: str) -> DataFrame:

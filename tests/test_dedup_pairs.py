@@ -41,6 +41,7 @@ def _assert_equals_naive(sh, measure, hot_df, nonempty=True):
     assert fast == naive, (measure, hot_df)
     if nonempty:
         assert len(fast) > 1, (measure, hot_df)
+    return fast
 
 
 @pytest.mark.parametrize("measure", MEASURES)
@@ -78,7 +79,7 @@ def test_engine_all_hot_degenerate_cap(spark, measure):
 
 # ---- property suite: synthetic corpora, adversarial vocabulary shapes ----
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _PROP_SETTINGS = dict(
@@ -114,7 +115,15 @@ def test_pair_engine_property_equivalence(spark, corpus, hot_df):
     _assert_equals_naive(_sh_df(spark, corpus), "jaccard", hot_df, nonempty=False)
 
 
+# A small doc inside a large one: containment 1.0 but Jaccard 0.3, the
+# pair only containment keeps. The test corpora have no such pair.
+_SMALL_IN_LARGE = [[0, 1, 2], list(range(10))]
+
+
+@example(corpus=_SMALL_IN_LARGE, hot_df=100)
 @given(corpus=_corpus, hot_df=st.sampled_from([0, 1, 2, 100]))
 @settings(**_PROP_SETTINGS)
 def test_containment_property_equivalence(spark, corpus, hot_df):
-    _assert_equals_naive(_sh_df(spark, corpus), "containment", hot_df, nonempty=False)
+    fast = _assert_equals_naive(_sh_df(spark, corpus), "containment", hot_df, nonempty=False)
+    if corpus == _SMALL_IN_LARGE:
+        assert fast[1:] == [(0, 1, 1.0, 0.3)], fast

@@ -548,7 +548,7 @@ def test_heavy_query_plans_stable_at_sf1(spark):
     from tools.plan_shapes import GOLDEN_SF1, HEAVY_SF1, SF1, shape_signature
 
     if not os.path.exists(os.path.join(SF1, "lineitem.parquet")):
-        pytest.skip("10x replica absent; regenerate via tools/scale_corpus.py")
+        pytest.skip("10x replica .cache/sf1 absent; create it with: python tools/scale_corpus.py 10")
     from mdb_to_postgres_spark.registry import QUERIES
 
     with open(GOLDEN_SF1) as f:

@@ -142,3 +142,20 @@ def test_copy_failure_surfaces_psql_error(spark):
     with _pytest.raises(Exception) as ei:
         pgc.copy_into_postgres(df, "no_such_table_xyz", create=False)
     assert "COPY stream failed" in str(ei.value) or "does not exist" in str(ei.value)
+
+
+def test_copy_array_and_byte_columns(spark):
+    """array<float> lands as JSONB (the embeddings table's shape) and
+    tinyint as SMALLINT; NULLs of both stay NULL."""
+    df = spark.createDataFrame(
+        [(1, [0.5, -1.25], 7), (2, None, None)], "id int, vec array<float>, b tinyint"
+    )
+    assert "\"vec\" JSONB" in pgc.create_table_ddl(df.schema, "t")
+    assert "\"b\" SMALLINT" in pgc.create_table_ddl(df.schema, "t")
+    pgc.copy_into_postgres(df, "array_byte_copy_test")
+    got = pgc.run_psql(
+        'SELECT jsonb_typeof("vec"), "vec"->>1, "b" FROM "array_byte_copy_test" WHERE "id" = 1'
+    )
+    assert got == "array|-1.25|7"
+    nulls = 'SELECT COUNT(*) FROM "array_byte_copy_test" WHERE "vec" IS NULL AND "b" IS NULL'
+    assert pgc.run_psql(nulls) == "1"

@@ -1,129 +1,122 @@
 """Round-10 depth items: the shared dedup pair-stats substrate, the
 char-LM model-size guard, the global-order memo LRU bound, the staged-
-stream staleness markers, and the ONE parametrized eviction audit over
-the package-wide session-cache registry."""
+stream staleness markers, and the session-substrate store's eviction
+contract."""
 
 from __future__ import annotations
 
+import importlib
 import os
 import re
 import shutil
+import types
 
 import pytest
 
 from conftest import ORACLE_SF, SMOKE_SF
 
-from mdb_to_postgres_spark.cache_registry import SESSION_CACHES
+from mdb_to_postgres_spark.sources import tables
 from mdb_to_postgres_spark.sources.tables import session_cache_get
 
 
 # ---------------------------------------------------------------- caches
 
+_DEAD_APP = types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId="app-dead-beef"))
 
-@pytest.mark.parametrize(
-    "label,cache", SESSION_CACHES, ids=[l for l, _ in SESSION_CACHES]
-)
-def test_session_cache_sweeps_stale_app_keys(spark, label, cache):
-    """Every registered cache is keyed with applicationId first and the
-    house sweep drops foreign-app keys on access: a key surviving its
-    session would pin dead-JVM plans/checkpoint blocks for the process
-    lifetime (round-9/10 ADVICE hazard class)."""
-    app = spark.sparkContext.applicationId
-    stale = ("app-dead-beef", "/no/such/sf")
-    cache[stale] = "stale-artifact"
-    probe = (app, "__r10_probe__")
-    session_cache_get(cache, spark, "__r10_probe__", lambda: "fresh")
-    try:
-        assert stale not in cache, label
-        assert all(k[0] == app for k in cache), label
-    finally:
-        cache.pop(probe, None)
+# Store name -> one call that builds that substrate: "module.function"
+# taking (spark, sf_dir), or T with a table name.
+_SUBSTRATES = {
+    "tables.df": ("sources.tables.T", "region"),
+    "dedup.jaccard_pairs": ("extensions.dedup.x_dedup_near_jaccard",),
+    "dedup.incr_base": ("extensions.dedup.x_dedup_minhash_incremental",),
+    "dedup.lsh_bands": ("extensions.dedup.x_dedup_minhash_lsh",),
+    "dedup.simhash_chunks": ("extensions.dedup.x_dedup_simhash",),
+    "dedup.components": ("extensions.dedup.x_dedup_components",),
+    "dedup.shingles": ("extensions.dedup.doc_shingles",),
+    "dedup.pair_stats": ("extensions.dedup.doc_pair_stats",),
+    "text.trigrams": ("extensions.text_analysis.doc_trigram_counts",),
+    "text.ngram_profiles": ("extensions.text_analysis.x_text_langid_ngram",),
+    "text.char_lm_model": ("extensions.text_analysis.x_text_char_lm_score",),
+    "text.bm25_index": ("extensions.text_analysis.x_text_bm25_retrieval",),
+    "text.bigram_lm_model": ("extensions.text_analysis.x_text_bigram_score",),
+    "graph.pairs": ("extensions.graph._sim_pairs",),
+    "sim.flat_corpus": ("extensions.similarity.flat_corpus",),
+    "sim.flat_centroids": ("extensions.similarity.flat_centroids",),
+    "sim.strides": ("extensions.similarity._centroid_stride",),
+    "sim.ivf_assign": ("extensions.similarity.ivf_assignment",),
+    "sim.kmeans_centroids": ("extensions.similarity.x_sim_ann_ivf_kmeans",),
+    "sim.lsh_buckets": ("extensions.similarity._lsh_buckets",),
+    "sim.lsh_codes": ("extensions.similarity._lsh_corpus_codes",),
+    "sim.pq_encode": ("extensions.similarity.x_sim_ann_ivf_pq",),
+    "sim.pq_dtab": ("extensions.similarity.x_sim_ann_ivf_pq",),
+    "win.concurrency_bounds": ("operators.windows.win_concurrency_sweep",),
+    "win.pareto_revenue": ("operators.windows.win_pareto_abc",),
+    "win.rfm_entity": ("operators.windows.win_rfm_segmentation",),
+    "agg.skew_counts": ("operators.aggregates.agg_key_skew_profile",),
+    "agg.ks_pv": ("operators.aggregates.agg_ks_two_sample",),
+    "phys.morton": ("operators.physical.sort_zorder_cluster",),
+    "scans.star_userkeys": ("operators.scans.etl_build_star_schema",),
+    "joins.order_pairs": ("operators.joins.order_part_pairs",),
+}
 
 
-def test_registry_is_complete():
-    """A new module-level *_CACHE dict that is not registered (or exempt)
-    fails here — the audit cannot silently go stale."""
+def _entries(label: str) -> dict:
+    return {
+        k: v
+        for k, v in tables._STORE.items()
+        if k[0] == SMOKE_SF and (k[1] == label or k[1].startswith((label + ".", label + "::")))
+    }
+
+
+@pytest.mark.parametrize("label", list(_SUBSTRATES))
+def test_session_cache_sweeps_stale_app_keys(spark, label):
+    """Each session substrate is an entry of the one store under its name,
+    so the store's applicationId sweep (test_session_store_contract) drops
+    it with its session, and a second build call hits the identical
+    object. An entry surviving its session would pin dead-JVM
+    plans/checkpoint blocks for the process lifetime."""
+    path, *args = _SUBSTRATES[label]
+    mod, fn = path.rsplit(".", 1)
+    build = getattr(importlib.import_module(f"mdb_to_postgres_spark.{mod}"), fn)
+    build(spark, SMOKE_SF, *args)
+    first = _entries(label)
+    assert first, label
+    build(spark, SMOKE_SF, *args)
+    assert all(_entries(label)[k] is v for k, v in first.items()), label
+
+
+def test_session_store_contract(spark):
+    """A hit returns the identical object, two sf dirs coexist in one
+    session, and a new applicationId drops every entry, T's included."""
+    t_smoke = tables.T(spark, SMOKE_SF, "region")
+    t_oracle = tables.T(spark, ORACLE_SF, "region")
+    assert t_oracle is not t_smoke
+    assert tables.T(spark, SMOKE_SF, "region") is t_smoke
+    assert tables.T(spark, ORACLE_SF, "region") is t_oracle
+    session_cache_get(_DEAD_APP, SMOKE_SF, "test.probe", object)
+    assert list(tables._STORE) == [(SMOKE_SF, "test.probe")]
+    assert tables.T(spark, SMOKE_SF, "region") is not t_smoke
+    assert (SMOKE_SF, "test.probe") not in tables._STORE
+
+
+def test_no_module_level_cache_dicts():
+    """Session substrates live in the one store; the only module-level
+    *_CACHE dict is global_order's plan-hash-keyed, LRU-bounded memo."""
     import mdb_to_postgres_spark as pkg
 
-    registered = {id(c) for _, c in SESSION_CACHES}
-    exempt = {
-        "_BUILD_CACHE",  # global_order: own evicting memo, own tests
-    }
-    root = os.path.dirname(pkg.__file__)
-    decl = re.compile(r"^(_[A-Z_]*CACHE)\s*(?::[^=]+)?=\s*\{\}", re.M)
-    missing = []
-    for dirpath, _, files in os.walk(root):
+    decl = re.compile(r"^(_[A-Z0-9_]*CACHE)\s*(?::[^=]+)?=\s*\{\}", re.M)
+    found = []
+    for dirpath, _, files in os.walk(os.path.dirname(pkg.__file__)):
         for fn in files:
-            if not fn.endswith(".py"):
-                continue
-            path = os.path.join(dirpath, fn)
-            src = open(path).read()
-            for m in decl.finditer(src):
-                var = m.group(1)
-                if var in exempt:
-                    continue
-                # resolve the module object to compare dict identity
-                rel = os.path.relpath(path, os.path.dirname(root))
-                modname = rel[:-3].replace(os.sep, ".")
-                import importlib
-
-                obj = getattr(importlib.import_module(modname), var)
-                if id(obj) not in registered:
-                    missing.append(f"{modname}.{var}")
-    assert not missing, f"unregistered session caches: {missing}"
-
-
-def test_every_cache_is_on_the_house_pattern():
-    """Source audit: each registered cache is populated through
-    session_cache_get, or carries its own inline stale-app sweep
-    (tables._DF_CACHE, dedup._COMP_CACHE)."""
-    import importlib
-    import inspect
-
-    inline_sweep = {"tables.df", "dedup.components"}
-    for label, cache in SESSION_CACHES:
-        # find the module owning this dict
-        owner = None
-        var = None
-        for modname in (
-            "mdb_to_postgres_spark.sources.tables",
-            "mdb_to_postgres_spark.extensions.dedup",
-            "mdb_to_postgres_spark.extensions.graph",
-            "mdb_to_postgres_spark.extensions.similarity",
-            "mdb_to_postgres_spark.extensions.text_analysis",
-            "mdb_to_postgres_spark.operators.aggregates",
-            "mdb_to_postgres_spark.operators.joins",
-            "mdb_to_postgres_spark.operators.physical",
-            "mdb_to_postgres_spark.operators.scans",
-            "mdb_to_postgres_spark.operators.windows",
-        ):
-            mod = importlib.import_module(modname)
-            for name, val in vars(mod).items():
-                if val is cache and name.endswith("CACHE"):
-                    owner, var = mod, name
-                    break
-            if owner:
-                break
-        assert owner is not None, label
-        src = inspect.getsource(owner)
-        on_pattern = re.search(
-            rf"session_cache_get\(\s*\n?\s*{var}", src
-        ) or label in inline_sweep
-        assert on_pattern, f"{label} ({var}) bypasses session_cache_get"
-        if label in inline_sweep:
-            assert re.search(rf"for k in \[k for k in {var} if k\[0\] != app\]", src), (
-                f"{label}: inline sweep missing"
-            )
+            if fn.endswith(".py"):
+                found += decl.findall(open(os.path.join(dirpath, fn)).read())
+    assert found == ["_BUILD_CACHE"], found
 
 
 def test_table_catalog_evicts_stale_app(spark):
-    from mdb_to_postgres_spark.sources import tables
-
-    tables._DF_CACHE[("app-dead-beef", "/no/such/sf", "region")] = "stale"
+    session_cache_get(_DEAD_APP, "/no/such/sf", "tables.df.region", lambda: "stale")
     tables.T(spark, SMOKE_SF, "region")
-    assert all(
-        k[0] == spark.sparkContext.applicationId for k in tables._DF_CACHE
-    )
+    assert ("/no/such/sf", "tables.df.region") not in tables._STORE
 
 
 # ------------------------------------------------- global-order memo LRU
@@ -161,12 +154,11 @@ def test_pair_stats_substrate_is_shared(spark):
     from mdb_to_postgres_spark.extensions import dedup
     from mdb_to_postgres_spark.registry import QUERIES
 
-    app = spark.sparkContext.applicationId
-    dedup._PAIR_STATS_CACHE.clear()
+    tables._STORE.pop((SMOKE_SF, "dedup.pair_stats"), None)
     QUERIES["x_dedup_near_jaccard"](spark, SMOKE_SF).count()
     QUERIES["x_dedup_containment"](spark, SMOKE_SF).count()
-    keys = [k for k in dedup._PAIR_STATS_CACHE if k[0] == app]
-    assert keys == [(app, SMOKE_SF)], keys
+    keys = [k for k in tables._STORE if k[1] == "dedup.pair_stats"]
+    assert keys == [(SMOKE_SF, "dedup.pair_stats")], keys
     a = dedup.doc_pair_stats(spark, SMOKE_SF)
     b = dedup.doc_pair_stats(spark, SMOKE_SF)
     assert a[0] is b[0] and a[1] is b[1]
