@@ -57,6 +57,7 @@ def build_payload(
     warm_totals: list[float] | None = None,
     disk: dict[str, float] | None = None,
     warm_passes: int | None = None,
+    jvm_archive: str | None = None,
 ) -> str:
     """The ONE stdout line the driver parses. Rounds 1-6 all recorded
     "parsed": null because the full per-query map (~8-10 KB at 300+
@@ -103,6 +104,11 @@ def build_payload(
         # sweep reclaimed — a run that is about to hit disk pressure
         # self-identifies in the ledger.
         payload["disk"] = disk
+    if jvm_archive:
+        # How the driver JVM started (session.get_session): "hit", "built"
+        # (the class-data-sharing archive was dumped first, inside this
+        # run's set-up) or "off:<reason>", so a launch-cost change shows.
+        payload["jvm_archive"] = jvm_archive
     return json.dumps(payload, separators=(",", ":"))
 
 
@@ -150,6 +156,7 @@ def main() -> None:
 
     spark = get_session("mdb-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    jvm_archive = spark.sparkContext.getConf().get("spark.graft.jvmArchive", "")
 
     queries = registry.all_queries()
     names = [n for n in sorted(queries) if n not in _EXCLUDE]
@@ -255,7 +262,7 @@ def main() -> None:
         # (jiffies at USER_HZ=100); high values explain a high spread_pct.
         "steal_s": round((_steal_jiffies() - steal_pre) / 100.0, 1),
     }
-    payload = build_payload(timings, sf, warm_totals, disk, warm_passes=len(all_warms))
+    payload = build_payload(timings, sf, warm_totals, disk, warm_passes=len(all_warms), jvm_archive=jvm_archive)
     os.write(real_stdout_fd, (payload + "\n").encode())
     os.close(real_stdout_fd)
 

@@ -93,3 +93,9 @@ def test_scale_curve_record_has_no_super_linear_query():
     t = rec["summary"]["totals"]
     assert list(t) == ["sf0.1", "sf1", "sf10"]
     assert t["sf0.1"] < t["sf1"] < t["sf10"]
+
+
+def test_payload_reports_jvm_archive_state():
+    parsed = json.loads(bench.build_payload({"q1": 1.0}, "0.1", jvm_archive="built"))
+    assert parsed["jvm_archive"] == "built"
+    assert "jvm_archive" not in json.loads(bench.build_payload({"q1": 1.0}, "0.1"))
