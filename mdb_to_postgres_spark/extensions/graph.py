@@ -244,9 +244,9 @@ def _kcore_oracle() -> str:
 
 @query("x_graph_kcore_peel", oracle=_kcore_oracle())
 def x_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core peeling (k={k}, {r} rounds) over the near-dup graph (#75
-    cont.): repeatedly drop nodes with degree < k and the edges they
-    carried — the graph-densification step that isolates the tightly
+    """k-core peeling (k=_KCORE_K=2, _KCORE_ROUNDS=3 rounds) over the
+    near-dup graph (#75 cont.): repeatedly drop nodes with degree < k and
+    the edges they carried — the graph-densification step that isolates the tightly
     interlinked duplicate clusters (a node surviving 2-core peeling has
     at least two independent near-dup partners: template/boilerplate
     families, not chance collisions).
@@ -257,7 +257,7 @@ def x_graph_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline (dedup.py: localCheckpoint per round + scalar convergence
     probe). Each round is degree-count + two semi-joins keyed on node
     ids — thin shuffles, broadcastable degree tables at any corpus
-    size.""".format(k=_KCORE_K, r=_KCORE_ROUNDS)
+    size."""
     edges = _sim_pairs(spark, sf_dir).select("doc_a", "doc_b")
     e = edges
     for _ in range(_KCORE_ROUNDS):

@@ -562,6 +562,45 @@ def test_heavy_query_plans_stable_at_sf1(spark):
     assert not drift, drift
 
 
+def test_regen_goldens_stops_on_heavy_shape_without_replica(tmp_path):
+    """Without the 10x replica, bash tools/regen_goldens.sh must refuse to
+    re-pin when a HEAVY_SF1 query's shape changed (its sf1 golden would go
+    stale unseen), and must go on when only other shapes changed. Run in a
+    scratch tree whose plan_shapes/record_fingerprints are stubs."""
+    import os
+    import shutil
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tools = tmp_path / "tools"
+    tools.mkdir()
+    shutil.copy(os.path.join(repo, "tools", "regen_goldens.sh"), tools)
+    (tools / "record_fingerprints.py").write_text("")
+
+    def run(changed: str):
+        (tools / "plan_shapes.py").write_text(
+            "import sys\n"
+            "HEAVY_SF1 = ('x_heavy',)\n"
+            "if __name__ == '__main__':\n"
+            "    if '--write' in sys.argv:\n"
+            "        open('wrote', 'w').close()\n"
+            f"    else:\n        print('CHANGED {changed}:')\n"
+        )
+        env = dict(os.environ, PYTHON=sys.executable)
+        return subprocess.run(
+            ["bash", str(tools / "regen_goldens.sh")], env=env, capture_output=True, text=True
+        )
+
+    out = run("x_heavy")
+    assert out.returncode != 0
+    assert "x_heavy" in out.stderr and "python tools/scale_corpus.py 10" in out.stderr
+    assert not (tmp_path / "wrote").exists()
+    out = run("x_light")
+    assert out.returncode == 0, out.stderr
+    assert (tmp_path / "wrote").exists()
+
+
 def test_char_lm_scoring_is_map_only(spark):
     # round-9 shape: the |alphabet|^2 model is a session-cached substrate
     # collected once; scoring evaluates a constant-folded bigram->ppm map

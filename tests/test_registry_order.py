@@ -157,3 +157,13 @@ def test_sidecar_pending_matches_current_tree():
     current = registry.current_fingerprints()
     stale = sorted(n for n in current if pending.get(n) != current[n])
     assert not stale, f"stale pending snapshot (rerun tools/record_fingerprints.py): {stale}"
+
+
+def test_every_query_has_a_docstring():
+    # The docstring is where each operator states its shape and its
+    # determinism argument. A string followed by .format()/.replace() is
+    # an expression statement, not a docstring, so it must be a literal.
+    import inspect
+
+    missing = [n for n, fn in registry.QUERIES.items() if not inspect.getdoc(inspect.unwrap(fn))]
+    assert not missing, missing

@@ -41,6 +41,7 @@ _SUBSTRATES = {
     "text.bigram_lm_model": ("extensions.text_analysis.x_text_bigram_score",),
     "graph.pairs": ("extensions.graph._sim_pairs",),
     "sim.flat_corpus": ("extensions.similarity.flat_corpus",),
+    "sim.flat_queries": ("extensions.similarity.flat_queries",),
     "sim.flat_centroids": ("extensions.similarity.flat_centroids",),
     "sim.strides": ("extensions.similarity._centroid_stride",),
     "sim.ivf_assign": ("extensions.similarity.ivf_assignment",),

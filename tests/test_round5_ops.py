@@ -56,30 +56,13 @@ def test_minhash_incremental_equals_full_restriction(spark):
 
 
 def test_ivf_pq_recall_vs_exact_knn(spark):
+    """The 64-deep ADC shortlist always leaves exactly 5 ranked neighbors
+    per query. Exact scoring, rank order and the recall floor against
+    exact kNN are in test_ann_quality_vs_exact_knn[x_sim_ann_ivf_pq]."""
     pq = QUERIES["x_sim_ann_ivf_pq"](spark, ORACLE_SF).toPandas()
-    knn = QUERIES["x_sim_topk_knn"](spark, ORACLE_SF).toPandas()
-    assert set(pq.columns) == {"query_id", "neighbor_id", "cos_sim", "rn"}
-    # every query gets exactly 5 ranked neighbors
     per_q = pq.groupby("query_id").rn.agg(["count", "max"])
+    assert len(per_q) == 20
     assert (per_q["count"] == 5).all() and (per_q["max"] == 5).all()
-    # rescored cosine is rank-consistent (descending in rn)
-    srt = pq.sort_values(["query_id", "rn"])
-    assert (srt.groupby("query_id").cos_sim.diff().dropna() <= 0).all()
-    # a recalled neighbor is scored identically to exact KNN
-    merged = pq.merge(knn, on=["query_id", "neighbor_id"], suffixes=("_pq", "_knn"))
-    assert (merged.cos_sim_pq == merged.cos_sim_knn).all()
-    # recall is bounded by the 16-entry codebook STUB + 64-deep shortlist;
-    # measured 0.56 on this gaussian corpus (vs 0.2% random-pick) — assert
-    # a wide floor so a topology regression trips it but noise can't
-    hits = 0
-    total = 0
-    for qid, grp in knn.groupby("query_id"):
-        exact_top = set(grp.neighbor_id)
-        approx_top = set(pq[pq.query_id == qid].neighbor_id)
-        hits += len(exact_top & approx_top)
-        total += len(exact_top)
-    assert total > 0
-    assert hits / total >= 0.4, (hits, total)
 
 
 def test_histogram_bins_partition_data(spark):
