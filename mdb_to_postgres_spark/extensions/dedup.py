@@ -21,35 +21,18 @@ from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources.tables import T, session_cache_get
-
-# Shared tokenization: lowercase, split on single spaces (corpus text is
-# single-spaced lowercase words; the normalized variant handles messier
-# input below).
-def _TOKS() -> "F.Column":  # lazy: Column creation needs an active SparkContext
-    return F.split(F.lower(F.col("text")), " ")
-
-
-def _shingles(df: DataFrame, n: int = 3) -> DataFrame:
-    """(doc_id, shingle) — distinct word n-gram shingles per doc.
-
-    Docs with fewer than n tokens are dropped BEFORE the window transform:
-    without the guard, size(toks)-n goes negative, sequence() produces a
-    descending range, and slice(toks, 0, n) raises (SQL arrays are
-    1-indexed) — so one short document would crash every shingle-based
-    query. Mirrors the `len(l) >= n` guard every DuckDB oracle carries."""
-    return (
-        df.select("doc_id", _TOKS().alias("toks"))
-        .filter(F.size("toks") >= n)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, size(toks)-{n}), i -> concat_ws(' ', slice(toks, i+1, {n})))"
-                )
-            ).alias("shingle"),
-        )
-        .distinct()
-    )
+from .doc_text import (
+    JACCARD,
+    JACCARD_PAIRS,
+    SCORED,
+    SELF_INTER,
+    SH_CTES,
+    SIZES,
+    TOKENS,
+    _shingles,
+    _TOKS,
+    pairs_sql,
+)
 
 
 @query(
@@ -96,31 +79,7 @@ def x_dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_JACCARD_ORACLE = """
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS isect
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON i.doc_a = sa.doc_id
-    JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) >= 0.35
-"""
-
-
-@query("x_dedup_near_jaccard", oracle=_JACCARD_ORACLE)
+@query("x_dedup_near_jaccard", oracle=JACCARD_PAIRS)
 def x_dedup_near_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact n-gram Jaccard near-dup (#60, deterministic variant): the
     complete (doc_a, doc_b, jaccard >= 0.35) pair list. Integer
@@ -182,8 +141,8 @@ def _pairs_from(
     the same artifacts build per call.
 
     The output is PROVABLY identical to the naive full-index self-join
-    (_naive_pairs_from / _naive_containment_from; tests/test_dedup_pairs.py
-    asserts it for both measures at hot caps 64/4/0 and on adversarial
+    (_naive_pairs_from(sh, measure); tests/test_dedup_pairs.py asserts it,
+    bit for bit, for both measures at hot caps 64/4/0 and on adversarial
     synthetic corpora). With (num, den, size) from _BOUNDS, four claims
     carry the proof:
 
@@ -312,12 +271,14 @@ def _pairs_from(
     return out.select("doc_a", "doc_b", "containment", "jaccard")
 
 
-# Naive full-inverted-index Jaccard: every sharing pair enumerated,
-# grouped, thresholded — the equivalence oracle for _pairs_from(sh,
-# "jaccard") and the shape of every DuckDB oracle over the pair list.
-# Quadratic in hot-shingle df, so off the query path.
-def _naive_pairs_from(sh: DataFrame) -> DataFrame:
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
+def _naive_scored(sh: DataFrame, sizes: DataFrame | None = None) -> DataFrame:
+    """(doc_a, doc_b, isect, sz_a, sz_b) for every shingle-sharing pair:
+    the naive full-inverted-index self-join, every sharing pair
+    enumerated and grouped. Quadratic in hot-shingle df, so off the
+    thresholded query path. `sizes` (doc_id, sz) injects the shared
+    pair-stats substrate's set sizes; standalone callers build them."""
+    if sizes is None:
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
     inter = (
@@ -326,18 +287,28 @@ def _naive_pairs_from(sh: DataFrame) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("isect"))
     )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))
-    jac = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect")),
-        )
-        .filter(F.col("jaccard") >= 0.35)
-    )
-    return jac.select("doc_a", "doc_b", "jaccard")
+    return inter.join(
+        sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a"
+    ).join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
+
+
+def _naive_jaccard() -> "F.Column":
+    return F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect"))
+
+
+def _naive_pairs_from(sh: DataFrame, measure: str) -> DataFrame:
+    """Naive thresholded pair list: the equivalence reference for
+    _pairs_from(sh, measure), with the same measures and output columns,
+    and the shape of every DuckDB oracle over the pair list. Written
+    apart from _pairs_from's code on purpose: it is what that code is
+    tested against."""
+    scored = _naive_scored(sh).withColumn("jaccard", _naive_jaccard())
+    if measure == "jaccard":
+        return scored.filter(F.col("jaccard") >= 0.35).select("doc_a", "doc_b", "jaccard")
+    out = scored.withColumn(
+        "containment", F.col("isect").cast("double") / F.least("sz_a", "sz_b")
+    ).filter(F.col("containment") >= 0.8)
+    return out.select("doc_a", "doc_b", "containment", "jaccard")
 
 
 _N_HASHES = 32
@@ -383,14 +354,7 @@ def _minhash_oracle() -> str:
         for b in range(_N_BANDS)
     )
     return f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
+    WITH {SH_CTES},
     hb AS (
       SELECT doc_id, ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS h FROM sh
     ),
@@ -406,20 +370,7 @@ def _minhash_oracle() -> str:
       FROM bands x JOIN bands y
         ON x.band = y.band AND x.band_sig = y.band_sig AND x.doc_id < y.doc_id
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS isect
-      FROM cand c
-      JOIN sh a ON a.doc_id = c.doc_a
-      JOIN sh b ON b.doc_id = c.doc_b AND b.shingle = a.shingle
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON i.doc_a = sa.doc_id
-    JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) >= 0.35
+    {pairs_sql("jaccard", "cand")}
     """
 
 
@@ -632,7 +583,7 @@ def _simhash_oracle() -> str:
     width = _SIMHASH_BITS // _SIMHASH_CHUNKS
     return f"""
     WITH tok AS (
-      SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS tok FROM documents
+      SELECT doc_id, UNNEST({TOKENS}) AS tok FROM documents
     ),
     h AS (
       SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS h FROM tok
@@ -817,24 +768,8 @@ def doc_pair_stats(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
 
 # Recursive-closure CTE prefix shared by the components query and the
 # canonical-keeper query built on top of it.
-_COMPONENTS_CTES = """
-    WITH RECURSIVE pairs AS (
-      WITH toks AS (SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents),
-      sh AS (
-        SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-               i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-        FROM toks WHERE len(l) >= 3
-      ),
-      sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-      inter AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS isect
-        FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-      )
-      SELECT i.doc_a, i.doc_b FROM inter i
-      JOIN sizes sa ON i.doc_a = sa.doc_id JOIN sizes sb ON i.doc_b = sb.doc_id
-      WHERE CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) >= 0.35
-    ),
+_COMPONENTS_CTES = f"""
+    WITH RECURSIVE pairs AS ({JACCARD_PAIRS}),
     edges AS (
       SELECT doc_a AS a, doc_b AS b FROM pairs
       UNION SELECT doc_b, doc_a FROM pairs
@@ -1013,15 +948,8 @@ def x_dedup_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_repeated_ngrams",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
+    oracle=f"""
+    WITH {SH_CTES},
     hot AS (
       SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) >= 5
     )
@@ -1070,28 +998,9 @@ def x_dedup_repeated_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_containment",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS isect
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.isect AS DOUBLE) / LEAST(sa.sz, sb.sz) AS containment,
-           CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON i.doc_a = sa.doc_id
-    JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE CAST(i.isect AS DOUBLE) / LEAST(sa.sz, sb.sz) >= 0.8
+    oracle=f"""
+    WITH {SH_CTES},
+    {pairs_sql("containment")}
     """,
 )
 def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1113,35 +1022,6 @@ def x_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pairs_from(
         doc_shingles(spark, sf_dir), "containment", stats=doc_pair_stats(spark, sf_dir)
     )
-
-
-def _naive_containment_from(sh: DataFrame) -> DataFrame:
-    """Naive full-inverted-index containment: the equivalence oracle for
-    _pairs_from(sh, "containment") (quadratic in hot-shingle df — off the
-    query path)."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("isect"))
-    )
-    out = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .withColumn(
-            "containment",
-            F.col("isect").cast("double") / F.least("sz_a", "sz_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("isect").cast("double") / (F.col("sz_a") + F.col("sz_b") - F.col("isect")),
-        )
-        .filter(F.col("containment") >= 0.8)
-    )
-    return out.select("doc_a", "doc_b", "containment", "jaccard")
 
 
 _URL_RAW_TPL = """
@@ -1214,15 +1094,8 @@ def x_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_prefix_filter_join",
-    oracle="""
-    WITH toksl AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toksl WHERE len(l) >= 3
-    ),
+    oracle=f"""
+    WITH {SH_CTES},
     df AS (SELECT shingle, COUNT(*) AS df FROM sh GROUP BY shingle),
     ranked AS (
       SELECT s.doc_id, s.shingle,
@@ -1240,20 +1113,7 @@ def x_dedup_url_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
         ON a.shingle = b.shingle AND a.doc_id < b.doc_id
        AND 100 * b.sz >= 35 * a.sz AND 100 * a.sz >= 35 * b.sz
     ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT c.doc_a, c.doc_b, COUNT(*) AS isect
-      FROM cand c
-      JOIN sh ta ON ta.doc_id = c.doc_a
-      JOIN sh tb ON tb.doc_id = c.doc_b AND tb.shingle = ta.shingle
-      GROUP BY c.doc_a, c.doc_b
-    )
-    SELECT i.doc_a, i.doc_b,
-           CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON i.doc_a = sa.doc_id
-    JOIN sizes sb ON i.doc_b = sb.doc_id
-    WHERE CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) >= 0.35
+    {pairs_sql("jaccard", "cand")}
     """,
 )
 def x_dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1300,26 +1160,13 @@ def x_dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_dedup_threshold_histogram",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS isect
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
+    oracle=f"""
+    WITH {SH_CTES},
+    {SIZES},
+    {SELF_INTER},
     j AS (
-      SELECT CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jac
-      FROM inter i
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
+      SELECT {JACCARD} AS jac
+      {SCORED}
     )
     SELECT LEAST(CAST(FLOOR(jac * 10) AS BIGINT), 9) AS jaccard_band,
            COUNT(*) AS n_pairs,
@@ -1336,8 +1183,9 @@ def x_dedup_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram means a safe threshold exists in the valley; a smooth
     decay means every threshold trades recall for precision.
 
-    Reuses the cached shingle substrate and the near_jaccard match-
-    stream shape with the threshold filter REMOVED (the whole point);
+    Reuses the cached shingle substrate and the naive reference's
+    self-join (_naive_scored) with the threshold filter REMOVED (the
+    whole point);
     the result is 10 rows regardless of corpus size, and at 100 TB the
     same curve is computed on the md5-band sample (agg_sampled_estimate)
     rather than every pair.
@@ -1346,27 +1194,9 @@ def x_dedup_threshold_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     — this is its third consumer; doc_stats.sz IS the distinct-shingle
     count, bit-equal by construction and A/B-verified), so the per-call
     work is the match stream + band aggregation only."""
-    sh = doc_shingles(spark, sf_dir)
     _, doc_stats = doc_pair_stats(spark, sf_dir)
-    sizes = doc_stats.select("doc_id", "sz")
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("isect"))
-    )
-    jac = (
-        inter.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("sz").alias("sz_a")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b")), "doc_b")
-        .select(
-            (
-                F.col("isect").cast("double")
-                / (F.col("sz_a") + F.col("sz_b") - F.col("isect"))
-            ).alias("jac")
-        )
-    )
+    scored = _naive_scored(doc_shingles(spark, sf_dir), doc_stats.select("doc_id", "sz"))
+    jac = scored.select(_naive_jaccard().alias("jac"))
     return jac.groupBy(
         F.least(F.floor(F.col("jac") * 10).cast("bigint"), F.lit(9).cast("bigint")).alias(
             "jaccard_band"
@@ -1451,7 +1281,7 @@ def join_bucketed_dedup_verify(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_dedup_cluster_quality_report",
     oracle=f"""
-    WITH RECURSIVE jp AS ({_JACCARD_ORACLE}),
+    WITH RECURSIVE jp AS ({JACCARD_PAIRS}),
     edges AS (
       SELECT doc_a AS a, doc_b AS b FROM jp
       UNION SELECT doc_b, doc_a FROM jp

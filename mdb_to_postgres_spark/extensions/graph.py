@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import session_cache_get
-from .dedup import _JACCARD_ORACLE, x_dedup_near_jaccard
+from .dedup import x_dedup_near_jaccard
+from .doc_text import JACCARD_PAIRS
 
 _PR_DAMP = 0.85
 _PR_ITERS = 3
@@ -46,7 +47,7 @@ def _sim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CTE for EVERY reference — the unrolled 3-iteration PageRank oracle
 # references it enough times to spill >75 GB of temp at the 10x replica
 # (round-10 finding). Same results, evaluated once.
-_PAIRS_CTE = f"pairs AS MATERIALIZED ({_JACCARD_ORACLE})"
+_PAIRS_CTE = f"pairs AS MATERIALIZED ({JACCARD_PAIRS})"
 
 
 def _pagerank_oracle() -> str:
@@ -172,7 +173,7 @@ def x_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_graph_degree_distribution",
     oracle=f"""
-    WITH pairs AS ({_JACCARD_ORACLE}),
+    WITH pairs AS ({JACCARD_PAIRS}),
     deg AS (
       SELECT doc_id, COUNT(*) AS degree FROM (
         SELECT doc_a AS doc_id FROM pairs
@@ -216,7 +217,7 @@ _KCORE_ROUNDS = 3
 
 def _kcore_oracle() -> str:
     sql = (
-        f"WITH pairs AS MATERIALIZED ({_JACCARD_ORACLE}),"
+        f"WITH pairs AS MATERIALIZED ({JACCARD_PAIRS}),"
         "\n    e0 AS MATERIALIZED (SELECT doc_a, doc_b FROM pairs)"
     )
     for r in range(_KCORE_ROUNDS):

@@ -22,6 +22,7 @@ from pyspark.sql.window import Window
 from ..registry import query
 from ..sources.tables import T
 from .dedup import doc_shingles
+from .doc_text import JACCARD_PAIRS, SH_CTES, TOKENS, _TOKS
 
 
 @query(
@@ -115,14 +116,7 @@ _EVAL_MOD = 50  # docs with doc_id % 50 == 0 stand in for the benchmark set
 @query(
     "x_contamination_check",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    )
+    WITH {SH_CTES}
     SELECT t.doc_id AS train_doc, e.doc_id AS eval_doc,
            COUNT(*) AS shared_shingles
     FROM sh t JOIN sh e ON t.shingle = e.shingle
@@ -156,7 +150,7 @@ def x_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT doc_id, text, n_chars,
-             list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+             list_filter({TOKENS}, t -> t <> '') AS toks
       FROM documents
     ),
     gated AS (
@@ -203,7 +197,7 @@ def x_pipeline_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix-sum (per-split), and the final rollup — the same three a
     100 TB run needs."""
     d = T(spark, sf_dir, "documents")
-    toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda t: t != "")
+    toks = F.filter(_TOKS(), lambda t: t != "")
     n_tok = F.size(toks)
     ttr = F.size(F.array_distinct(toks)).cast("double") / n_tok
     gated = d.select("doc_id", "text", "n_chars", n_tok.alias("nt"), ttr.alias("ttr")).filter(
@@ -645,29 +639,8 @@ def x_mix_rebalance_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_pipeline_contrastive_triplets",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
-    sh AS (
-      SELECT DISTINCT doc_id, UNNEST(list_transform(range(len(l) - 2),
-             i -> l[i+1] || ' ' || l[i+2] || ' ' || l[i+3])) AS shingle
-      FROM toks WHERE len(l) >= 3
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
-    inter AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS isect
-      FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-      GROUP BY a.doc_id, b.doc_id
-    ),
-    pos AS (
-      SELECT i.doc_a, i.doc_b,
-             CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) AS jaccard
-      FROM inter i
-      JOIN sizes sa ON i.doc_a = sa.doc_id
-      JOIN sizes sb ON i.doc_b = sb.doc_id
-      WHERE CAST(i.isect AS DOUBLE) / (sa.sz + sb.sz - i.isect) >= 0.35
-    ),
+    oracle=f"""
+    WITH pos AS ({JACCARD_PAIRS}),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
     cand AS (
       SELECT doc_a, doc_b, jaccard,

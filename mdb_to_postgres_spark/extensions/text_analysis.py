@@ -14,9 +14,7 @@ from pyspark.sql import functions as F
 
 from ..registry import query
 from ..sources.tables import T, session_cache_get
-
-def _TOKS() -> "F.Column":  # lazy: Column creation needs an active SparkContext
-    return F.split(F.lower(F.col("text")), " ")
+from .doc_text import TERM, TOKENS, TOKS_CTE, _TOKS
 
 # Tiny per-language stopword lists for the n-gram/lexicon language-ID
 # heuristic. Chosen to be disjoint.
@@ -30,9 +28,9 @@ _LANG_MARKERS = {
 
 @query(
     "x_text_tokenize_tf",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT {TERM} FROM documents
     )
     SELECT term, COUNT(*) AS tf
     FROM toks
@@ -53,9 +51,9 @@ def x_text_tokenize_tf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_tfidf",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-      SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT doc_id, {TERM} FROM documents
     ),
     tf AS (
       SELECT doc_id, term, COUNT(*) AS tf FROM tok WHERE term <> '' GROUP BY doc_id, term
@@ -133,7 +131,7 @@ def _marker_hits(lang: str) -> F.Column:
 
 def _sql_marker_hits(lang: str) -> str:
     words = ", ".join(f"'{w}'" for w in _LANG_MARKERS[lang])
-    return f"len(list_filter(string_split(lower(text), ' '), t -> t IN ({words})))"
+    return f"len(list_filter({TOKENS}, t -> t IN ({words})))"
 
 
 @query(
@@ -191,7 +189,7 @@ _STOPWORDS = ("the", "a", "of", "and", "in", "to", "is", "on", "for", "with")
     oracle=f"""
     WITH t AS (
       SELECT doc_id, n_chars,
-             list_filter(string_split(lower(text), ' '), t -> t <> '') AS toks
+             list_filter({TOKENS}, t -> t <> '') AS toks
       FROM documents
     )
     SELECT doc_id,
@@ -230,10 +228,10 @@ def x_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_token_count",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, lang,
-             len(list_filter(string_split(lower(text), ' '), t -> t <> '')) AS ws_tokens,
+             len(list_filter({TOKENS}, t -> t <> '')) AS ws_tokens,
              len(regexp_extract_all(text, '[a-z]+')) AS word_pieces,
              CAST(CEIL(n_chars / 4.0) AS BIGINT) AS byte_pair_est
       FROM documents
@@ -275,7 +273,7 @@ _SQL_TOKVAL = "(length(t) * 31 + ascii(substr(t, 1, 1)) * 7 + ascii(substr(t, le
     WITH t AS (
       SELECT doc_id,
              list_prepend(CAST(0 AS BIGINT),
-               list_transform(list_filter(string_split(lower(text), ' '), t -> t <> ''),
+               list_transform(list_filter({TOKENS}, t -> t <> ''),
                               t -> CAST({_SQL_TOKVAL} AS BIGINT))) AS vals
       FROM documents
     )
@@ -308,9 +306,9 @@ def x_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_repetition_quality",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term
+      SELECT doc_id, {TERM}
       FROM documents
     ),
     tot AS (
@@ -322,7 +320,7 @@ def x_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT doc_id,
              UNNEST(list_transform(range(len(l) - 2),
                                    i -> concat_ws(' ', l[i+1], l[i+2], l[i+3]))) AS g
-      FROM (SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents)
+      FROM (SELECT doc_id, {TOKENS} AS l FROM documents)
       WHERE len(l) >= 3
     ),
     tric AS (SELECT doc_id, g, COUNT(*) AS c FROM tri GROUP BY doc_id, g),
@@ -384,9 +382,9 @@ def x_text_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_vocab_coverage",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT {TERM} FROM documents
     ),
     tf AS (SELECT term, COUNT(*) AS c FROM toks WHERE term <> '' GROUP BY term),
     ranked AS (
@@ -496,9 +494,7 @@ _CHUNK, _STRIDE = 50, 40  # tokens per chunk / stride (10-token overlap)
 @query(
     "x_text_chunk_overlap",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
+    WITH {TOKS_CTE},
     chunks AS (
       SELECT doc_id, len(l) AS n_tokens,
              UNNEST(range(((len(l) - 1) // {_STRIDE}) + 1)) AS chunk_idx
@@ -518,9 +514,7 @@ def x_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic: map-only with zero shuffle, so it scales linearly with
     corpus bytes and parallelizes per input split."""
     d = T(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("l")).filter(
-        F.size("l") > 0
-    )
+    t = d.select("doc_id", _TOKS().alias("l")).filter(F.size("l") > 0)
     c = t.select(
         "doc_id",
         F.size("l").cast("long").alias("n_tokens"),
@@ -542,10 +536,8 @@ def x_text_chunk_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_bigram_score",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
+    oracle=f"""
+    WITH {TOKS_CTE},
     bg AS (
       SELECT doc_id, UNNEST(list_transform(range(len(l) - 1),
              i -> l[i+1] || ' ' || l[i+2])) AS bigram
@@ -584,9 +576,7 @@ def x_text_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed once per DISTINCT bigram instead of once per occurrence.
     No all-pairs, no driver state."""
     d = T(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("l")).filter(
-        F.size("l") >= 2
-    )
+    t = d.select("doc_id", _TOKS().alias("l")).filter(F.size("l") >= 2)
     bg = t.select(
         "doc_id",
         F.explode(
@@ -630,7 +620,7 @@ _QG_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it", "for", "on")
 _QG_SQL = f"""
     WITH toks AS (
       SELECT doc_id, n_chars,
-             list_filter(string_split(lower(text), ' '), t -> t <> '') AS l
+             list_filter({TOKENS}, t -> t <> '') AS l
       FROM documents
     ),
     sig AS (
@@ -692,9 +682,9 @@ def x_text_quality_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ENTROPY_SQL = """
+_ENTROPY_SQL = f"""
     WITH tok AS (
-      SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT doc_id, {TERM} FROM documents
     ),
     tf AS (
       SELECT doc_id, term, COUNT(*) AS c FROM tok WHERE term <> '' GROUP BY doc_id, term
@@ -848,7 +838,7 @@ def _cms_oracle() -> str:
     )
     return f"""
     WITH tok AS (
-      SELECT UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT {TERM} FROM documents
     ),
     tok2 AS (SELECT term FROM tok WHERE term <> ''),
     total AS (SELECT COUNT(*) AS n FROM tok2),
@@ -934,7 +924,7 @@ _BM25_K1, _BM25_B = 1.2, 0.75
 
 _BM25_SQL = f"""
 WITH tok AS (
-  SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+  SELECT doc_id, {TERM} FROM documents
 ),
 tok2 AS (SELECT doc_id, term FROM tok WHERE term <> ''),
 dl AS (SELECT doc_id, COUNT(*) AS dlen FROM tok2 GROUP BY doc_id),
@@ -1042,9 +1032,9 @@ def x_text_bm25_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_feature_hashing",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-      SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+      SELECT doc_id, {TERM} FROM documents
     ),
     hashed AS (
       SELECT doc_id,
@@ -1093,9 +1083,7 @@ _SPAN = 2  # demo span width; production substring dedup uses ~50 (the
 @query(
     "x_text_dedup_spans",
     oracle=f"""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
+    WITH {TOKS_CTE},
     grams AS (
       SELECT doc_id, p, array_to_string(l[p+1:p+{_SPAN}], ' ') AS gram
       FROM (SELECT doc_id, l, UNNEST(range(len(l) - {_SPAN - 1})) AS p
@@ -1150,7 +1138,7 @@ def x_text_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     at sf0.1: 1.03 -> 0.20 s min, bit-equal, plan 8 Exchanges -> 0."""
     d = T(spark, sf_dir, "documents")
     return (
-        d.select("doc_id", F.split(F.lower(F.col("text")), " ").alias("l"))
+        d.select("doc_id", _TOKS().alias("l"))
         .filter(F.size("l") > 0)
         .withColumn("n", F.size("l"))
         # (gram, 0-indexed position) structs, sorted by (gram, p): slice
@@ -1199,10 +1187,10 @@ def x_text_dedup_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_bpe_merge_candidates",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
       SELECT term, COUNT(*) AS tf FROM (
-        SELECT UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+        SELECT {TERM} FROM documents
       ) WHERE term <> '' GROUP BY term
     ),
     pairs AS (
@@ -1257,8 +1245,8 @@ def x_text_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_text_stopword_removal",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, len(string_split(lower(text), ' ')) AS n_tokens,
-             list_filter(string_split(lower(text), ' '),
+      SELECT doc_id, len({TOKENS}) AS n_tokens,
+             list_filter({TOKENS},
                          t -> t <> '' AND t NOT IN ({', '.join(f"'{w}'" for w in _STOPWORDS)})) AS kept
       FROM documents
     )
@@ -1431,7 +1419,7 @@ def x_text_langid_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, pos, l[pos + 1] AS tok
-      FROM (SELECT doc_id, string_split(lower(text), ' ') AS l,
+      FROM (SELECT doc_id, {TOKENS} AS l,
                    UNNEST(range(len(l))) AS pos
             FROM documents)
     ),
@@ -1505,9 +1493,7 @@ def x_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     d = T(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.posexplode(F.split(F.lower(F.col("text")), " ")).alias("pos", "tok")
-    )
+    tok = d.select("doc_id", F.posexplode(_TOKS()).alias("pos", "tok"))
     is_stop = F.col("tok").isin(*_STOPWORDS) | (F.col("tok") == "")
     seg = tok.withColumn("is_stop", is_stop).withColumn(
         "seg_id",
@@ -1551,10 +1537,10 @@ def x_text_keyphrase_rake(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_zipf_fit",
-    oracle="""
+    oracle=f"""
     WITH tf AS (
       SELECT term, COUNT(*) AS tf FROM (
-        SELECT UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+        SELECT {TERM} FROM documents
       ) WHERE term <> '' GROUP BY term
     ),
     ranked AS (
@@ -1639,10 +1625,10 @@ def x_text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_burstiness",
-    oracle="""
+    oracle=f"""
     WITH dc AS (
       SELECT doc_id, term, COUNT(*) AS x FROM (
-        SELECT doc_id, UNNEST(string_split(lower(text), ' ')) AS term FROM documents
+        SELECT doc_id, {TERM} FROM documents
       ) WHERE term <> '' GROUP BY doc_id, term
     ),
     n AS (SELECT COUNT(*) AS n_docs FROM documents),
@@ -1706,10 +1692,8 @@ def x_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_text_collocation_pmi",
-    oracle="""
-    WITH toks AS (
-      SELECT doc_id, string_split(lower(text), ' ') AS l FROM documents
-    ),
+    oracle=f"""
+    WITH {TOKS_CTE},
     uni AS (
       SELECT tok, COUNT(*) AS c FROM (
         SELECT UNNEST(l) AS tok FROM toks

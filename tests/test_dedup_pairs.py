@@ -16,28 +16,25 @@ import pytest
 from pyspark.sql import functions as F
 
 from mdb_to_postgres_spark.extensions.dedup import (
-    _naive_containment_from,
     _naive_pairs_from,
     _pairs_from,
     doc_shingles,
 )
 from tests.conftest import ORACLE_SF
 
-NAIVE = {"jaccard": _naive_pairs_from, "containment": _naive_containment_from}
-MEASURES = list(NAIVE)
+MEASURES = ["jaccard", "containment"]
 
 
 def _pairs_key(pdf):
-    """(doc_a, doc_b, *scores) rows in pair order, scores rounded to 12
-    places; the column names lead so a schema drift fails too."""
+    """(doc_a, doc_b, *scores) rows in pair order, scores as the exact
+    doubles; the column names lead so a schema drift fails too."""
     pdf = pdf.sort_values(["doc_a", "doc_b"]).reset_index(drop=True)
-    scores = [pdf[c].round(12) for c in pdf.columns[2:]]
-    return [tuple(pdf.columns)] + list(zip(pdf.doc_a, pdf.doc_b, *scores))
+    return [tuple(pdf.columns)] + list(zip(*(pdf[c] for c in pdf.columns)))
 
 
 def _assert_equals_naive(sh, measure, hot_df, nonempty=True):
     fast = _pairs_key(_pairs_from(sh, measure, hot_df=hot_df).toPandas())
-    naive = _pairs_key(NAIVE[measure](sh).toPandas())
+    naive = _pairs_key(_naive_pairs_from(sh, measure).toPandas())
     assert fast == naive, (measure, hot_df)
     if nonempty:
         assert len(fast) > 1, (measure, hot_df)

@@ -157,7 +157,7 @@ def test_shingles_short_docs_do_not_crash(spark):
     """Documents with fewer than n tokens must be dropped by the shingle
     guard, not crash the transform (negative-length sequence -> slice(_, 0, n)
     raises) or emit bogus short shingles."""
-    from mdb_to_postgres_spark.extensions.dedup import _shingles
+    from mdb_to_postgres_spark.extensions.doc_text import _shingles
 
     d = spark.createDataFrame(
         [(1, "one"), (2, "just two"), (3, "exactly three tokens"),
