@@ -60,9 +60,15 @@ def sql_q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(_Q1)
 
 
+def _rev(alias: str) -> str:
+    return REVENUE_EXPR.replace("l_extendedprice", f"{alias}.l_extendedprice").replace(
+        "l_discount", f"{alias}.l_discount"
+    )
+
+
 _Q3 = f"""
     SELECT l.l_orderkey,
-           CAST(SUM({REVENUE_EXPR.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue,
+           CAST(SUM({_rev('l')}) AS DOUBLE) AS revenue,
            o.o_orderdate,
            o.o_orderpriority
     FROM customer c
@@ -87,7 +93,7 @@ def sql_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _Q5 = f"""
     SELECT n.n_name,
-           CAST(SUM({REVENUE_EXPR.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue
+           CAST(SUM({_rev('l')}) AS DOUBLE) AS revenue
     FROM customer c
     JOIN orders o ON c.c_custkey = o.o_custkey
     JOIN lineitem l ON l.l_orderkey = o.o_orderkey
@@ -115,7 +121,7 @@ def sql_q5_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
 _Q10 = f"""
     SELECT c.c_custkey,
            c.c_name,
-           CAST(SUM({REVENUE_EXPR.replace('l_extendedprice', 'l.l_extendedprice').replace('l_discount', 'l.l_discount')}) AS DOUBLE) AS revenue,
+           CAST(SUM({_rev('l')}) AS DOUBLE) AS revenue,
            c.c_acctbal,
            n.n_name,
            c.c_mktsegment
@@ -267,12 +273,6 @@ def sql_q19_discounted_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dates, no phone column — each adaptation keeps the ORIGINAL query's plan
 # shape: the correlated/EXISTS/semi-join structure is the point, not the
 # exact column set).
-
-
-def _rev(alias: str) -> str:
-    return REVENUE_EXPR.replace("l_extendedprice", f"{alias}.l_extendedprice").replace(
-        "l_discount", f"{alias}.l_discount"
-    )
 
 
 _Q2 = """

@@ -77,7 +77,8 @@ _LOADED = False
 #            stale green row does not cover new code;
 #   rank 3 — recorded rows-only and still without an oracle (a re-check
 #            cannot improve the record);
-#   rank 4 — hash-green and unchanged.
+#   rank 4 — hash-green and unchanged; greens without a fingerprint stamp
+#            lead it (see _order_key).
 # Within a rank, module registration order is kept. Each round the driver's
 # new file feeds back in, so the front-50 converges toward full coverage
 # with no per-round edits. tools/record_fingerprints.py refreshes the
@@ -206,6 +207,21 @@ def _parse_history(paths: list[str]) -> dict[str, str]:
 _LATEST_ROUND: dict[str, str] = {}
 
 
+def _order_key(name: str, fn: QueryFn) -> tuple:
+    """Sort key of a query in the correctness-check order: its _check_rank,
+    then, within the hash-green-and-unchanged rank 4, greens WITHOUT a
+    fingerprint stamp first — the sidecar cannot vouch for them (a stamp
+    dropped by hand because a helper the fingerprint does not hash
+    changed, or one never seeded) — then the oldest CORRECTNESS row first, so
+    the window's spare slots refresh the stalest evidence instead of
+    re-stamping last round's set. _LATEST_ROUND basenames sort by round;
+    absent entries (shouldn't happen post-convergence) lead."""
+    rank = _check_rank(name, name in ORACLES, _fingerprint(fn, ORACLES.get(name)))
+    if rank != 4:
+        return (rank, False, "")
+    return (rank, name in _recorded_fingerprints(), _LATEST_ROUND.get(name, ""))
+
+
 def load_all() -> None:
     """Import every module that registers queries (idempotent), then order
     the registry so the driver's 50-entry correctness window lands on the
@@ -225,18 +241,9 @@ def load_all() -> None:
     from .extensions import graph  # noqa: F401  (reuses dedup's jaccard substrate)
     from .extensions import evaluation  # noqa: F401
 
-    def _order_key(name: str, fn: QueryFn) -> tuple:
-        rank = _check_rank(name, name in ORACLES, _fingerprint(fn, ORACLES.get(name)))
-        # Within the unchanged greens (rank 4), oldest driver stamp first:
-        # the window's spare slots refresh the stalest evidence instead of
-        # re-stamping last round's set. _LATEST_ROUND basenames sort by
-        # round; absent entries (shouldn't happen post-convergence) lead.
-        age = _LATEST_ROUND.get(name, "") if rank == 4 else ""
-        return (rank, age)
-
     _correctness_history()  # populate _LATEST_ROUND before ordering
     ordered = sorted(QUERIES.items(), key=lambda kv: _order_key(*kv))
-    # sorted() is stable: registration order survives within (rank, age)
+    # sorted() is stable: registration order survives within one key
     QUERIES.clear()
     QUERIES.update(ordered)
     _LOADED = True

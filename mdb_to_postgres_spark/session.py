@@ -30,26 +30,36 @@ from pyspark.sql import SparkSession
 # AQE's coalescing (initialPartitionNum high, coalesce down).
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32"))
 
+# The engine's runtime SQL conf: set on our own builder (build_conf) and on
+# any session handed to us (tune_session, run by every registered query and
+# by sources.tables.T).
+SQL_CONF = {
+    # Adaptive execution: runtime re-planning, partition coalescing,
+    # skew-join splitting — required posture for the 100 TB design goal.
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Spark's 200 default costs ~1-2 s of pure task scheduling PER QUERY
+    # at sf0.01.
+    "spark.sql.shuffle.partitions": str(DEFAULT_SHUFFLE_PARTITIONS),
+    # Arrow for every Python<->JVM crossing (pandas_udf, toPandas).
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Deterministic timezone so date/time functions match the DuckDB
+    # oracle regardless of host TZ.
+    "spark.sql.session.timeZone": "UTC",
+    # Permissive casts (bad values -> NULL), mirroring the reference's
+    # tolerant mdb-export -> Postgres load path (SURVEY.md §2.2 #10);
+    # Spark 4 defaults ANSI on.
+    "spark.sql.ansi.enabled": "false",
+    # Nanosecond parquet timestamps surface as BIGINT nanos (Spark 4
+    # refuses TIMESTAMP(NANOS) otherwise; the events table carries one).
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
 
-def build_conf(builder: SparkSession.Builder, shuffle_partitions: int | None = None) -> SparkSession.Builder:
+
+def build_conf(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Apply engine defaults to a builder (also used by tests/bench)."""
-    return (
-        builder
-        # Adaptive execution: runtime re-planning, partition coalescing,
-        # skew-join splitting — required posture for the 100 TB design goal.
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS))
-        # Arrow for every Python<->JVM crossing (pandas_udf, toPandas).
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Deterministic timezone so date/time functions match the DuckDB
-        # oracle regardless of host TZ.
-        .config("spark.sql.session.timeZone", "UTC")
-        # Permissive casts (bad values -> NULL), mirroring the reference's
-        # tolerant mdb-export -> Postgres load path (SURVEY.md §2.2 #10).
-        .config("spark.sql.ansi.enabled", "false")
-    )
+    return builder.config(map=SQL_CONF)
 
 
 def _session_builder(app_name: str) -> SparkSession.Builder:
@@ -90,10 +100,7 @@ def _session_builder(app_name: str) -> SparkSession.Builder:
         # same repeated Janino compilation. Static conf (read when the
         # CodeGenerator cache is first built), hence set here and not in
         # tune_session.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", "5000")
         # Round 12 (guide §5): localCheckpoint/broadcast blocks are only
         # released after the ContextCleaner sees their driver references
         # collected — and a 24 g heap may not take a full GC for many
@@ -103,12 +110,9 @@ def _session_builder(app_name: str) -> SparkSession.Builder:
         # spiking 0.8 -> 43 s in late warm passes). Spark's own remedy is
         # the cleaner's periodic GC (default 30min — never fires inside a
         # pass); 90s keeps the block manager drained continuously.
-        # Env-overridable; on a real cluster executors GC on their own
-        # heap pressure and this only affects the driver.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "90s"),
-        )
+        # On a real cluster executors GC on their own heap pressure and
+        # this only affects the driver.
+        .config("spark.cleaner.periodicGC.interval", "90s")
     )
     # Optional dedicated scratch root for shuffle/spill files (static conf,
     # only effective when this factory launches the JVM). bench.py points
@@ -407,27 +411,20 @@ _TUNED_APPS: set[str] = set()
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable engine conf to an externally provided session.
+    """Apply SQL_CONF to an externally provided session.
 
     The verification driver constructs its own SparkSession; static conf
-    (master, memory) is theirs, but runtime conf that affects result
-    determinism (timezone, ANSI mode) and small-scale latency (AQE, shuffle
-    partition count — Spark's 200 default costs ~1-2 s of pure task
-    scheduling PER QUERY at sf0.01) is settable here. Called by every
-    registered query via the registry wrapper, memoized per application so
-    the conf RPCs happen once per session.
+    (master, memory) is theirs, but the runtime conf that affects result
+    determinism (timezone, ANSI mode, nanosecond timestamps) and
+    small-scale latency (AQE, shuffle partition count) is settable here.
+    Called by every registered query via the registry wrapper and by
+    every table scan (sources.tables.T), memoized per application so the
+    conf RPCs happen once per session.
     """
     app_id = spark.sparkContext.applicationId
     if app_id in _TUNED_APPS:
         return spark
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.ansi.enabled", "false")  # permissive tier-R casts
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    try:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
-    except Exception:
-        pass  # static in some builds; fine
+    for key, value in SQL_CONF.items():
+        spark.conf.set(key, value)
     _TUNED_APPS.add(app_id)
     return spark

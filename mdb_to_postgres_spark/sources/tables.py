@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import tune_session
+
 TABLES = (
     "region",
     "nation",
@@ -66,9 +68,6 @@ def session_cache_get(spark: SparkSession, sf_dir: str, name: str, build):
     return _STORE[key]
 
 
-_CONF_DONE: set[str] = set()
-
-
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one corpus table (catalog-cached per session).
 
@@ -77,22 +76,12 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (metastore) instead of re-deriving the schema per query, so the scan
     is a session substrate like any other.
 
-    Sets runtime conf needed for determinism against the DuckDB oracle
-    even when the caller built the SparkSession without our factory:
-    UTC timezone, and nanosecond parquet timestamps surfaced as BIGINT
-    nanos (Spark 4 refuses TIMESTAMP(NANOS) otherwise; the events table
-    carries one).
+    Tunes the session first (``session.tune_session``: UTC, permissive
+    casts, nanosecond parquet timestamps as BIGINT nanos), so a scan is
+    deterministic against the DuckDB oracle even when the caller built
+    the SparkSession without our factory.
     """
-    app = spark.sparkContext.applicationId
-    if app not in _CONF_DONE:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Permissive casts are tier-R semantics (bad value -> NULL, like the
-        # reference's tolerant load) and several queries rely on them.
-        # Spark 4 defaults ANSI on, and the verification driver builds its
-        # own session — so pin it here, not only in our session factory.
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        _CONF_DONE.add(app)
+    tune_session(spark)
     return session_cache_get(
         spark, sf_dir, f"tables.df.{name}", lambda: spark.read.parquet(f"{sf_dir}/{name}.parquet")
     )

@@ -1,19 +1,20 @@
 """Batch-checkable forms of the streaming operators (SURVEY.md §2.8 #52-58).
 
-The same windowing expressions run under readStream in ``runtime.py``;
-here they run on the static events table so the DuckDB oracle can verify
-the window semantics exactly. Window boundaries are emitted as epoch-second
-BIGINTs: deterministic across engines and timestamp precisions.
+An operator that also runs under readStream has its one body in
+``runtime.py``; its form here calls that body on the static events table,
+so the DuckDB oracle verifies the window semantics exactly. Window
+boundaries are emitted as epoch-second BIGINTs: deterministic across
+engines and timestamp precisions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..registry import query
 from ..sources.tables import events_ts, ev_sec_sql
+from . import runtime
 
 _EV_SEC = ev_sec_sql()  # generation-derived: see sources/tables.py
 
@@ -36,20 +37,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
 def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows (#52): F.window produces [start, end) struct;
     emitted as epoch seconds. Streaming twin: runtime.tumbling_counts."""
-    e = _events(spark, sf_dir)
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("event_cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "event_type",
-            "event_cnt",
-            "value_sum",
-        )
-    )
+    return runtime.tumbling_counts(_events(spark, sf_dir))
 
 
 @query(
@@ -115,17 +103,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     events closer than the gap; end = last event + gap. The oracle is the
     classic gaps-and-islands rewrite — exact equivalence. Streaming twin:
     runtime.session_counts."""
-    e = _events(spark, sf_dir).withColumn("ts_s", F.to_timestamp(F.col("ts_sec")))
-    return (
-        e.groupBy(F.session_window("ts_s", "30 minutes").alias("w"), "user_id")
-        .agg(F.count("*").alias("event_cnt"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "event_cnt",
-        )
-    )
+    return runtime.session_counts(_events(spark, sf_dir))
 
 
 @query(
@@ -216,9 +194,7 @@ def stream_foreach_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     foreachBatch, read the sink back. Result must equal the batch GROUP BY
     — this is the one gate query that actually executes the streaming
     engine."""
-    from .runtime import run_foreach_sink_counts
-
-    return run_foreach_sink_counts(spark, sf_dir)
+    return runtime.run_foreach_sink_counts(spark, sf_dir)
 
 
 @query(
@@ -236,18 +212,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     against a static (broadcastable) dim table — the canonical streaming
     enrichment shape. Batch form groups the enriched stream per
     (segment, type); streaming twin: runtime.static_join_counts."""
-    from ..sources.tables import T
-
-    e = _events(spark, sf_dir)
-    c = T(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    return (
-        e.join(F.broadcast(c), e.user_id == c.c_custkey)
-        .groupBy("c_mktsegment", "event_type")
-        .agg(
-            F.count("*").alias("event_cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("value_sum"),
-        )
-    )
+    return runtime.static_join_counts(spark, _events(spark, sf_dir), sf_dir)
 
 
 _SS_BAND_SEC = 600  # purchase within 10 minutes after a click, same user
@@ -271,26 +236,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming this needs watermarks on BOTH sides plus the time-range
     predicate so state can be expired; the batch form is the same plan
     minus watermarks. Streaming twin: runtime.click_purchase_join."""
-    e = _events(spark, sf_dir)
-    a = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("a_user"),
-        F.col("ts_sec").alias("a_sec"),
-    )
-    b = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("b_user"),
-        F.col("ts_sec").alias("b_sec"),
-    )
-    joined = a.join(
-        b,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("b_sec") >= F.col("a_sec"))
-        & (F.col("b_sec") - F.col("a_sec") <= _SS_BAND_SEC),
-    )
-    return joined.select(
-        "click_id", "purchase_id", (F.col("b_sec") - F.col("a_sec")).alias("gap_sec")
-    )
+    return runtime.click_purchase_join(spark, sf_dir, _SS_BAND_SEC, source=_events)
 
 
 @query(
@@ -409,33 +355,7 @@ def stream_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     maintained incrementally by Structured Streaming with the comparison
     in a foreachBatch sink; batch form = one windowed aggregate + one
     ordered window pass over the (tiny) per-window table."""
-    e = _events(spark, sf_dir)
-    from pyspark.sql.window import Window
-
-    win = (
-        e.groupBy(F.window("ts", "15 minutes").alias("w"))
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").cast("long").alias("window_start"), "cnt")
-    )
-    wspec = Window.orderBy("window_start").rowsBetween(-4, -1)
-    trail = win.select(
-        "window_start",
-        "cnt",
-        F.avg(F.col("cnt").cast("double")).over(wspec).alias("trailing_avg"),
-        F.count("*").over(wspec).alias("trailing_n"),
-    )
-    return (
-        trail.filter(
-            (F.col("trailing_n") == 4)
-            & (F.col("cnt") > 1.5 * F.col("trailing_avg"))
-        )
-        .select(
-            "window_start",
-            "cnt",
-            F.round("trailing_avg", 6).alias("trailing_avg"),
-            F.round(F.col("cnt") / F.col("trailing_avg"), 6).alias("rate_ratio"),
-        )
-    )
+    return runtime.rate_alerts(runtime.rate_window_counts(_events(spark, sf_dir)))
 
 
 @query(
@@ -488,19 +408,7 @@ def stream_session_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the multi-sf oracle sweep caught it. Events are second-truncated
     (ts_sec) so both engines bin identically. Runs incrementally under
     Structured Streaming with the same expression."""
-    e = _events(spark, sf_dir)
-    gap = F.when(F.col("event_type") == "error", "3600 seconds").otherwise("1800 seconds")
-    return (
-        e.withColumn("ts_s", F.to_timestamp(F.col("ts_sec")))
-        .groupBy(F.session_window("ts_s", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("event_cnt"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "event_cnt",
-        )
-    )
+    return runtime.session_counts_dynamic(_events(spark, sf_dir))
 
 
 @query(
@@ -621,21 +529,7 @@ def stream_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-and-cut runs per closed window over at most |types| rows, so
     the top-k itself costs nothing at any event rate — state size is
     bounded by windows x types, never by events."""
-    e = _events(spark, sf_dir)
-    counts = (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.col("w.start").cast("long").alias("window_start"), "event_type", "cnt")
-    )
-    from pyspark.sql.window import Window as W
-
-    ranked = counts.withColumn(
-        "rnk",
-        F.row_number().over(
-            W.partitionBy("window_start").orderBy(F.desc("cnt"), F.asc("event_type"))
-        ),
-    )
-    return ranked.filter(F.col("rnk") <= 3)
+    return runtime.top3_per_window(runtime.type_counts_hourly(_events(spark, sf_dir)))
 
 
 @query(
@@ -745,8 +639,6 @@ def stream_join_windowed_runtime(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch SQL for the same semantics: with the corpus's in-order arrival
     nothing is ever late, so engine output == batch output exactly — the
     equivalence that certifies the streaming deployment."""
-    from . import runtime
-
     return runtime.run_to_memory(
         spark,
         runtime.windowed_join_counts(spark, sf_dir),
@@ -799,27 +691,10 @@ def stream_outer_join_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     horizon fully settled. The join state is user-bucketed and the
     time-range predicate bounds per-key state exactly as the inner
     variant's."""
-    e = _events(spark, sf_dir)
-    a = e.filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("a_user"),
-        F.col("ts_sec").alias("a_sec"),
-    )
-    b = e.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("b_user"),
-        F.col("ts_sec").alias("b_sec"),
-    )
-    joined = a.join(
-        b,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("b_sec") >= F.col("a_sec"))
-        & (F.col("b_sec") - F.col("a_sec") <= _SS_BAND_SEC),
-        "left_outer",
-    )
-    return joined.select(
+    pairs = runtime.click_purchase_pairs(spark, sf_dir, _SS_BAND_SEC, _events, "left_outer")
+    return pairs.select(
         "click_id",
         "purchase_id",
-        (F.col("b_sec") - F.col("a_sec")).alias("gap_sec"),
+        "gap_sec",
         F.when(F.col("purchase_id").isNull(), 0).otherwise(1).alias("matched"),
     )

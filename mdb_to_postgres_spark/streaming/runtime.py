@@ -1,10 +1,34 @@
-"""Real Structured Streaming implementations (SURVEY.md §2.8, E3 lifecycle).
+"""Structured Streaming operators (SURVEY.md §2.8, E3 lifecycle).
 
 File-source micro-batches over the events parquet, availableNow triggers
 (bounded replay of everything, then stop), checkpointed sinks. At cluster
 scale the same code points readStream at a Kafka/file landing zone and
-drops availableNow for a continuous trigger — transformation bodies are
-shared with batch_forms.py by construction.
+drops availableNow for a continuous trigger.
+
+Each operator below has one transformation body. Its registered batch
+form in batch_forms.py calls that body on the static events table
+(``sources.tables.events_ts``), where Spark's analyzer drops
+``withWatermark`` (EliminateEventTimeWatermark), so the batch plan is the
+plain aggregate the DuckDB oracle checks; tests/test_streaming.py runs
+the same body under readStream and compares:
+
+  tumbling_counts                        stream_tumbling_window
+  session_counts                         stream_session_window
+  session_counts_dynamic                 stream_session_dynamic_gap
+  static_join_counts                     stream_static_join
+  click_purchase_join                    stream_stream_join
+  click_purchase_pairs                   stream_outer_join_watermark
+                                         (and windowed_join_counts)
+  rate_window_counts + rate_alerts       stream_rate_alert
+  type_counts_hourly + top3_per_window   stream_windowed_topk
+
+Four streaming forms keep a body of their own, because their output
+differs from the batch form's: dedup_stream (one surviving row per key;
+stream_dedup reports the key's min id and count), stateful_user_counters
+(update-mode rows per batch; stream_stateful_count adds distinct types),
+run_cdc_upsert (foreachBatch MERGE; stream_cdc_upsert is one window
+top-1) and windowed_user_cardinality (the HLL estimate only;
+stream_window_approx_distinct carries the exact count and the bound).
 """
 
 from __future__ import annotations
@@ -13,11 +37,13 @@ import os
 import shutil
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from ..scratch import release, scratch_dir
+from ..sources.tables import T as _scan
 
 # File-stream schema factory: the corpus has shipped ts as BIGINT nanos in
 # one generation and TIMESTAMP(US) NTZ in another, so the explicit schema a
@@ -106,8 +132,6 @@ def _read_marker(path: str) -> str | None:
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events.parquet as a file-source stream (explicit schema, required
     for file streams and our extracted-schema discipline anyway)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The file stream source requires a directory; stage the table's
     # file(s) into one (per-sf cache). Handles both the driver's
     # single-file tables and the scale replicas' part-file directories —
@@ -132,13 +156,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.replace(tmp, os.path.join(stage, f"events_{i:04d}.parquet"))
         with open(sig, "w") as f:
             f.write(_src_sig(src))
-    from ..sources.tables import T as _scan
-
-    ts_is_long = _scan(spark, sf_dir, "events").schema["ts"].dataType.simpleString() == "bigint"
-    raw = spark.readStream.schema(_events_raw_schema(ts_is_long)).format("parquet").load(stage)
-    if ts_is_long:
-        return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+    return _stream_events(spark, sf_dir, stage)
 
 
 def read_events_stream_sliced(
@@ -182,20 +200,25 @@ def read_events_stream_sliced(
             os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
         with open(done, "w") as f:
             f.write(_src_sig(f"{sf_dir}/events.parquet"))
-    from ..sources.tables import T as _scan
+    return _stream_events(spark, sf_dir, stage, maxFilesPerTrigger="1")
 
+
+def _stream_events(spark: SparkSession, sf_dir: str, stage: str, **options: str) -> DataFrame:
+    """The staged events directory as a file-source stream with the
+    reader ``options``. The scan of the events table through T picks the
+    raw schema's ts type and tunes the session (UTC, nanosAsLong) before
+    the stream is defined."""
     ts_is_long = _scan(spark, sf_dir, "events").schema["ts"].dataType.simpleString() == "bigint"
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = (
-        spark.readStream.schema(_events_raw_schema(ts_is_long))
-        .option("maxFilesPerTrigger", "1")
-        .format("parquet")
-        .load(stage)
-    )
+    raw = spark.readStream.schema(_events_raw_schema(ts_is_long)).options(**options).format("parquet").load(stage)
     if ts_is_long:
         return raw.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def run_to_memory(spark: SparkSession, streaming_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Execute a bounded stream (availableNow) into an in-memory sink and
+    return the final static result."""
+    return run_to_memory_with_progress(spark, streaming_df, name, output_mode)[0]
 
 
 def run_to_memory_with_progress(
@@ -224,8 +247,15 @@ def run_to_memory_with_progress(
         release(ckpt)
 
 
+def _second() -> Column:
+    """Event time truncated to the whole second, as a timestamp: the
+    binning both engines share (the oracle's epoch-second ts_sec)."""
+    return F.to_timestamp(F.col("ts").cast("long"))
+
+
 def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
-    """Streaming twin of batch_forms.stream_tumbling_window."""
+    """Per-(hour, type) event count and exact value sum (#52); the body
+    of batch_forms.stream_tumbling_window."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -242,9 +272,14 @@ def tumbling_counts(events: DataFrame, watermark: str = "10 minutes") -> DataFra
     )
 
 
-def session_counts(events: DataFrame, gap: str = "30 minutes", watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of batch_forms.stream_session_window."""
-    e = events.withColumn("ts_s", F.to_timestamp(F.col("ts").cast("long")))  # second-truncated
+def session_counts(
+    events: DataFrame, gap: str | Column = "30 minutes", watermark: str = "1 hour"
+) -> DataFrame:
+    """Per-user sessions closed by ``gap`` of inactivity (#54), on
+    second-truncated event time; the body of
+    batch_forms.stream_session_window. ``gap`` is a duration string or a
+    per-row Column (session_counts_dynamic)."""
+    e = events.withColumn("ts_s", _second())
     return (
         e.withWatermark("ts_s", watermark)
         .groupBy(F.session_window("ts_s", gap).alias("w"), "user_id")
@@ -283,25 +318,6 @@ def dedup_stream(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
         # batch twin and the pre-r9 schema) ends at minute_start.
         .drop("minute_ts")
     )
-
-
-def run_to_memory(spark: SparkSession, streaming_df: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Execute a bounded stream (availableNow) into an in-memory sink and
-    return the final static result. Test harness helper."""
-    ckpt = scratch_dir(f"ckpt_{name}_")  # one-shot: released after the run
-    try:
-        q = (
-            streaming_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.table(name)
-    finally:
-        release(ckpt)
 
 
 def run_foreach_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -348,6 +364,35 @@ def run_foreach_sink_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(data_dir)
 
 
+# Per-user running counters (#57), shared by both stateful APIs: state is
+# (event count, value sum in integer cents); the output row is the
+# user's counters after the batch.
+_COUNTER_STATE = T.StructType(
+    [
+        T.StructField("cnt", T.LongType()),
+        T.StructField("sum_cents", T.LongType()),
+    ]
+)
+_COUNTER_OUT = T.StructType(
+    [
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_cnt", T.LongType()),
+        T.StructField("value_sum", T.DoubleType()),
+    ]
+)
+
+
+def _fold_counters(key, state: tuple[int, int], pdfs) -> tuple[tuple[int, int], pd.DataFrame]:
+    """Fold one batch of a user's rows into its (count, cents) state;
+    returns the new state and the user's output row."""
+    cnt, cents = state
+    for pdf in pdfs:
+        cnt += len(pdf)
+        cents += int(round(pdf["value"].sum() * 100))
+    row = pd.DataFrame({"user_id": [key[0]], "event_cnt": [cnt], "value_sum": [cents / 100.0]})
+    return (cnt, cents), row
+
+
 def stateful_user_counters(events: DataFrame) -> DataFrame:
     """Custom stateful operator (#57): per-user running counters via
     applyInPandasWithState. State = (event_cnt, value_sum_cents) carried
@@ -358,34 +403,15 @@ def stateful_user_counters(events: DataFrame) -> DataFrame:
     """
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_cnt", T.LongType()),
-            T.StructField("value_sum", T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("cnt", T.LongType()),
-            T.StructField("sum_cents", T.LongType()),
-        ]
-    )
-
     def update(key, pdfs, state: GroupState):
-        cnt, cents = state.get if state.exists else (0, 0)
-        for pdf in pdfs:
-            cnt += len(pdf)
-            cents += int(round(pdf["value"].sum() * 100))
-        state.update((cnt, cents))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "event_cnt": [cnt], "value_sum": [cents / 100.0]}
-        )
+        new, row = _fold_counters(key, state.get if state.exists else (0, 0), pdfs)
+        state.update(new)
+        yield row
 
     return events.groupBy("user_id").applyInPandasWithState(
         update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
+        outputStructType=_COUNTER_OUT,
+        stateStructType=_COUNTER_STATE,
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
@@ -412,51 +438,30 @@ def stateful_user_counters_tws(events: DataFrame) -> DataFrame:
         StatefulProcessorHandle,
     )
 
-    state_schema = T.StructType(
-        [
-            T.StructField("cnt", T.LongType()),
-            T.StructField("sum_cents", T.LongType()),
-        ]
-    )
-    out_schema = T.StructType(
-        [
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_cnt", T.LongType()),
-            T.StructField("value_sum", T.DoubleType()),
-        ]
-    )
-
     class Counters(StatefulProcessor):
         def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("counters", state_schema)
+            self._state = handle.getValueState("counters", _COUNTER_STATE)
 
         def handleInputRows(self, key, rows, timerValues):
-            cnt, cents = self._state.get() if self._state.exists() else (0, 0)
-            for pdf in rows:
-                cnt += len(pdf)
-                cents += int(round(pdf["value"].sum() * 100))
-            self._state.update((cnt, cents))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "event_cnt": [cnt], "value_sum": [cents / 100.0]}
-            )
+            new, row = _fold_counters(key, self._state.get() if self._state.exists() else (0, 0), rows)
+            self._state.update(new)
+            yield row
 
         def close(self) -> None:
             pass
 
     return events.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=Counters(),
-        outputStructType=out_schema,
+        outputStructType=_COUNTER_OUT,
         outputMode="Update",
         timeMode="None",
     )
 
 
 def static_join_counts(spark: SparkSession, events: DataFrame, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment twin of batch_forms.stream_static_join:
+    """Stream-static enrichment, the body of batch_forms.stream_static_join:
     each micro-batch joins the (static, broadcast) customer dim."""
-    cust = (
-        spark.read.parquet(f"{sf_dir}/customer.parquet").select("c_custkey", "c_mktsegment")
-    )
+    cust = _scan(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     return (
         events.join(F.broadcast(cust), events.user_id == cust.c_custkey)
         .groupBy("c_mktsegment", "event_type")
@@ -467,39 +472,55 @@ def static_join_counts(spark: SparkSession, events: DataFrame, sf_dir: str) -> D
     )
 
 
-def click_purchase_join(
-    spark: SparkSession, sf_dir: str, band_sec: int = 600, source=None
+def click_purchase_pairs(
+    spark: SparkSession, sf_dir: str, band_sec: int = 600, source=None, how: str = "inner"
 ) -> DataFrame:
-    """Stream-stream interval join twin of batch_forms.stream_stream_join:
-    two independent file streams (clicks, purchases) with watermarks on
-    both sides + the time-range predicate — the state-expiry contract a
-    stream-stream join requires. Event time is floor-second-truncated
-    before the watermark so the interval predicate matches the batch
-    form's ts_sec bounds exactly (see windowed_join_counts). `source`
-    overrides the stream reader (default read_events_stream; the eviction
-    gate passes read_events_stream_sliced to replay as ordered
-    micro-batches)."""
+    """Clicks joined to same-user purchases at most ``band_sec`` seconds
+    later: (click_id, purchase_id, b_ts, gap_sec). The two sides are
+    independent reads of ``source`` (default read_events_stream; the
+    eviction gate passes read_events_stream_sliced, the batch forms the
+    static events table), each watermarked — with the time-range
+    predicate, the state-expiry contract a stream-stream join requires.
+    ``how`` is the join type (stream_outer_join_watermark: left_outer).
+
+    Both event-time columns are truncated to whole seconds BEFORE the
+    watermark: the interval predicate then runs on floor-second
+    timestamps, which is exactly the batch/oracle contract (b_sec >=
+    a_sec, b_sec <= a_sec + band). On raw microsecond timestamps a
+    same-second reversed-microsecond pair and a pair with raw gap in
+    (band, band+1) would diverge from the floor-second form."""
     source = source or read_events_stream
-    clicks = source(spark, sf_dir).filter(F.col("event_type") == "click").select(
-        F.col("event_id").alias("click_id"),
-        F.col("user_id").alias("a_user"),
-        F.to_timestamp(F.col("ts").cast("long")).alias("a_ts"),
-    ).withWatermark("a_ts", "30 minutes")
-    purchases = source(spark, sf_dir).filter(
-        F.col("event_type") == "purchase"
-    ).select(
-        F.col("event_id").alias("purchase_id"),
-        F.col("user_id").alias("b_user"),
-        F.to_timestamp(F.col("ts").cast("long")).alias("b_ts"),
-    ).withWatermark("b_ts", "30 minutes")
-    joined = clicks.join(
-        purchases,
+
+    def side(event_type: str, id_col: str, p: str) -> DataFrame:
+        return (
+            source(spark, sf_dir)
+            .filter(F.col("event_type") == event_type)
+            .select(
+                F.col("event_id").alias(id_col),
+                F.col("user_id").alias(f"{p}_user"),
+                _second().alias(f"{p}_ts"),
+            )
+            .withWatermark(f"{p}_ts", "30 minutes")
+        )
+
+    joined = side("click", "click_id", "a").join(
+        side("purchase", "purchase_id", "b"),
         (F.col("a_user") == F.col("b_user"))
         & (F.col("b_ts") >= F.col("a_ts"))
         & (F.col("b_ts") <= F.col("a_ts") + F.expr(f"INTERVAL {band_sec} SECONDS")),
+        how,
     )
-    gap = (F.unix_timestamp("b_ts") - F.unix_timestamp("a_ts")).alias("gap_sec")
-    return joined.select("click_id", "purchase_id", gap)
+    gap = F.unix_seconds(F.col("b_ts")) - F.unix_seconds(F.col("a_ts"))
+    return joined.select("click_id", "purchase_id", "b_ts", gap.alias("gap_sec"))
+
+
+def click_purchase_join(
+    spark: SparkSession, sf_dir: str, band_sec: int = 600, source=None
+) -> DataFrame:
+    """Stream-stream interval join (#58c), the body of
+    batch_forms.stream_stream_join: (click_id, purchase_id, gap_sec) of
+    every click-purchase pair within the band."""
+    return click_purchase_pairs(spark, sf_dir, band_sec, source).drop("b_ts")
 
 
 def run_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -514,8 +535,6 @@ def run_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     key, and the final read filters them out. Overwrite-per-batch of the
     (user-count-sized) state table is the idempotent-restart pattern; a
     production sink does the same via JDBC/Delta MERGE."""
-    from pyspark.sql.window import Window as _W
-
     # State table outlives this call (the returned DataFrame reads `cur`
     # lazily) -> atexit-swept, not eagerly released.
     state_dir = scratch_dir("cdc_state_")
@@ -530,7 +549,7 @@ def run_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = _W.partitionBy("user_id").orderBy(F.desc("ts_sec"), F.desc("event_id"))
+        w = Window.partitionBy("user_id").orderBy(F.desc("ts_sec"), F.desc("event_id"))
         latest = (
             batch_df.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
@@ -595,23 +614,22 @@ def windowed_user_cardinality(events: DataFrame, watermark: str = "1 hour") -> D
     )
 
 
-def run_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of batch_forms.stream_rate_alert: the 15-minute
-    counts are maintained incrementally by the engine (windowed agg,
-    append after watermark close); the trailing-baseline comparison —
-    which needs cross-window ORDER, not incremental state — runs over
-    the (tiny) materialized per-window table, the same split a
-    production foreachBatch alerting sink uses."""
-    ev = read_events_stream(spark, sf_dir)
-    win = (
-        ev.withWatermark("ts", "1 hour")
+def rate_window_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Event count per 15-minute window: the incremental half of the rate
+    alert (batch_forms.stream_rate_alert)."""
+    return (
+        events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "15 minutes").alias("w"))
         .agg(F.count("*").alias("cnt"))
         .select(F.col("w.start").cast("long").alias("window_start"), "cnt")
     )
-    counts = run_to_memory(spark, win, "rate_alert_windows", "append")
-    from pyspark.sql.window import Window
 
+
+def rate_alerts(counts: DataFrame) -> DataFrame:
+    """The windows of ``counts`` running above 1.5x their trailing
+    4-window average; warm-up windows (fewer than 4 predecessors) never
+    fire. Needs cross-window ORDER, not incremental state, so it runs on
+    the materialized per-window table."""
     wspec = Window.orderBy("window_start").rowsBetween(-4, -1)
     trail = counts.select(
         "window_start",
@@ -633,35 +651,28 @@ def run_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def session_counts_dynamic(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin of batch_forms.stream_session_dynamic_gap: the
-    per-event gap expression works identically under incremental session
-    state — error events hold their session 60 minutes, others 30."""
-    e = events.withColumn("ts_s", F.to_timestamp(F.col("ts").cast("long")))
+    """Dynamic-gap sessions; the body of
+    batch_forms.stream_session_dynamic_gap: the per-event gap expression
+    works identically under incremental session state — error events
+    hold their session 60 minutes, others 30."""
     gap = F.when(F.col("event_type") == "error", "3600 seconds").otherwise("1800 seconds")
+    return session_counts(events, gap, watermark)
+
+
+def run_rate_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """stream_rate_alert under the engine: the 15-minute counts are
+    maintained incrementally (windowed agg, append after watermark
+    close), and rate_alerts runs over the materialized per-window table —
+    the same split a production foreachBatch alerting sink uses."""
+    win = rate_window_counts(read_events_stream(spark, sf_dir))
+    return rate_alerts(run_to_memory(spark, win, "rate_alert_windows", "append"))
+
+
+def type_counts_hourly(events: DataFrame, watermark: str = "10 minutes") -> DataFrame:
+    """Event count per (hour, type): the incremental half of
+    batch_forms.stream_windowed_topk."""
     return (
-        e.withWatermark("ts_s", watermark)
-        .groupBy(F.session_window("ts_s", gap).alias("w"), "user_id")
-        .agg(F.count("*").alias("event_cnt"))
-        .select(
-            "user_id",
-            F.col("w.start").cast("long").alias("session_start"),
-            F.col("w.end").cast("long").alias("session_end"),
-            "event_cnt",
-        )
-    )
-
-
-def run_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming twin of batch_forms.stream_windowed_topk: the count
-    stage runs as an incremental windowed aggregation under the real
-    engine (append mode, availableNow); the rank-and-cut is applied to
-    the materialized sink — the standard deployment split, because a
-    global per-window rank is not an incremental operator (it would
-    re-order on every update) while ranking CLOSED windows in the sink
-    is a <= |types|-row batch step per window."""
-    events = read_events_stream(spark, sf_dir)
-    counts = (
-        events.withWatermark("ts", "10 minutes")
+        events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("cnt"))
         .select(
@@ -670,18 +681,31 @@ def run_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cnt",
         )
     )
-    sink = run_to_memory(spark, counts, "win_topk_stream", "append")
-    from pyspark.sql.window import Window as W
 
+
+def top3_per_window(counts: DataFrame) -> DataFrame:
+    """The 3 most frequent types of each window, ties broken by type."""
     return (
-        sink.withColumn(
+        counts.withColumn(
             "rnk",
             F.row_number().over(
-                W.partitionBy("window_start").orderBy(F.desc("cnt"), F.asc("event_type"))
+                Window.partitionBy("window_start").orderBy(F.desc("cnt"), F.asc("event_type"))
             ),
         )
         .filter(F.col("rnk") <= 3)
     )
+
+
+def run_windowed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """stream_windowed_topk under the engine: the count stage runs as an
+    incremental windowed aggregation (append mode, availableNow); the
+    rank-and-cut is applied to the materialized sink — the standard
+    deployment split, because a global per-window rank is not an
+    incremental operator (it would re-order on every update) while
+    ranking CLOSED windows in the sink is a <= |types|-row batch step per
+    window."""
+    counts = type_counts_hourly(read_events_stream(spark, sf_dir))
+    return top3_per_window(run_to_memory(spark, counts, "win_topk_stream", "append"))
 
 
 def windowed_join_counts(spark: SparkSession, sf_dir: str, band_sec: int = 600) -> DataFrame:
@@ -694,43 +718,10 @@ def windowed_join_counts(spark: SparkSession, sf_dir: str, band_sec: int = 600) 
     which is the entire difference between a stream job that runs forever
     and one that OOMs on day three.
 
-    Both event-time columns are truncated to whole seconds BEFORE the
-    watermark (same pattern as session_counts): the interval predicate and
-    the hourly window then run on floor-second timestamps, which is exactly
-    the batch/oracle contract (b_sec >= a_sec, b_sec <= a_sec + band). On
-    raw microsecond timestamps a same-second reversed-microsecond pair and
-    a pair with raw gap in (band, band+1) would diverge from the
-    floor-second form — sf0.01 has no such pair, but the equivalence must
-    not depend on that."""
-    clicks = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id").alias("a_user"),
-            F.to_timestamp(F.col("ts").cast("long")).alias("a_ts"),
-        )
-        .withWatermark("a_ts", "30 minutes")
-    )
-    purchases = (
-        read_events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id").alias("b_user"),
-            F.to_timestamp(F.col("ts").cast("long")).alias("b_ts"),
-        )
-        .withWatermark("b_ts", "30 minutes")
-    )
-    joined = clicks.join(
-        purchases,
-        (F.col("a_user") == F.col("b_user"))
-        & (F.col("b_ts") >= F.col("a_ts"))
-        & (F.col("b_ts") <= F.col("a_ts") + F.expr(f"INTERVAL {band_sec} SECONDS")),
-    )
-    gap = F.unix_seconds(F.col("b_ts")) - F.unix_seconds(F.col("a_ts"))
+    The pairs come from click_purchase_pairs, on floor-second event time,
+    so the hourly window bins b_sec exactly as the oracle does."""
     return (
-        joined.select("b_ts", gap.alias("gap_sec"))
+        click_purchase_pairs(spark, sf_dir, band_sec)
         .groupBy(F.window("b_ts", "1 hour").alias("w"))
         .agg(
             F.count("*").alias("n_pairs"),

@@ -30,8 +30,7 @@ def spark():
         # blocks (py4j ConnectionRefused = JVM OOM death, round 9).
         .config("spark.driver.memory", "12g")
     )
-    # Few shuffle partitions: test data is tiny, scheduling dominates.
-    s = build_conf(builder, shuffle_partitions=4).getOrCreate()
+    s = build_conf(builder).getOrCreate()
     yield s
     s.stop()
 

@@ -133,6 +133,34 @@ def test_fingerprint_mismatch_demotes_green(monkeypatch):
     assert registry._check_rank(g, True, real_fp) == 4
 
 
+def test_unstamped_green_leads_rank_four(monkeypatch):
+    # A green whose stamp was dropped by hand (a helper the fingerprint
+    # does not hash was rewritten) still ranks 4, but it must lead every
+    # stamped green — oldest CORRECTNESS row first within each group — or the
+    # hand drop hides it behind ~200 stamped greens instead of putting it
+    # in the next window's spare slots.
+    a, b, c, d = list(registry.QUERIES)[:4]
+
+    def fp(n):
+        return registry._fingerprint(registry.QUERIES[n], registry.ORACLES.get(n))
+
+    monkeypatch.setattr(registry, "_HISTORY", {n: "green" for n in (a, b, c, d)})
+    monkeypatch.setattr(registry, "_RECORDED_FP", {b: fp(b), c: fp(c)})
+    monkeypatch.setattr(
+        registry,
+        "_LATEST_ROUND",
+        {
+            a: "CORRECTNESS_r13.json",
+            b: "CORRECTNESS_r05.json",
+            c: "CORRECTNESS_r09.json",
+            d: "CORRECTNESS_r11.json",
+        },
+    )
+    keys = {n: registry._order_key(n, registry.QUERIES[n]) for n in (a, b, c, d)}
+    assert {k[0] for k in keys.values()} == {4}
+    assert sorted((a, b, c, d), key=keys.get) == [d, a, b, c]
+
+
 def test_fingerprint_stable_under_reformat():
     g = next(iter(registry.QUERIES))
     fn = registry.QUERIES[g]

@@ -9,8 +9,8 @@ instead of surfacing rounds later as a bench regression.
 Regenerate (after REVIEWING the diff is intended):
     python tools/plan_shapes.py --write
 The session config here must stay identical to tests/conftest.py's spark
-fixture (local[4], 4 shuffle partitions) — signatures are config-stable
-but not config-independent.
+fixture (local[4], session.build_conf's SQL conf: 32 shuffle partitions)
+— signatures are config-stable but not config-independent.
 """
 
 from __future__ import annotations
@@ -103,7 +103,7 @@ def main() -> None:
     from mdb_to_postgres_spark.session import build_conf
 
     builder = SparkSession.builder.master("local[4]").appName("plan-shapes")
-    spark = build_conf(builder, shuffle_partitions=4).getOrCreate()
+    spark = build_conf(builder).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if "--sf1" in sys.argv:
         shapes, golden_path, sf_tag = compute_sf1(spark), GOLDEN_SF1, SF1
